@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main. One warmup pass (JIT/codegen/session init) then one
   * measured pass per query. The action is a `noop`-format write, NOT
@@ -82,8 +83,10 @@ object Bench {
     // (measured: e_zorder 1.03s at warmups=1 vs 0.38s chunked).
     val warmups = sys.env.get("SPARK_GRAFT_WARMUPS").map(_.toInt).getOrElse(1)
     (1 to warmups).foreach { _ =>
-      ordered.foreach { case (_, fn) =>
-        try runOnce(fn) catch { case _: Throwable => () }
+      ordered.foreach { case (name, fn) =>
+        try runOnce(fn) catch {
+          case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: $e")
+        }
         teardown()
       }
     }
@@ -100,7 +103,7 @@ object Bench {
       ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         try runOnce(fn) catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             // control chars (tabs included) are illegal inside JSON strings
             // — flatten them so one exotic message cannot corrupt the line
             errors(name) = s"${e.getClass.getSimpleName}: ${

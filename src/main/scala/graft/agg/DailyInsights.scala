@@ -2,7 +2,6 @@ package graft.agg
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions.avg2
 import graft.schema.{DailyInsight, TrendingVideo}
 
@@ -11,8 +10,9 @@ import graft.schema.{DailyInsight, TrendingVideo}
   * Python loop becomes ONE scan feeding one fine-grained hash aggregate per
   * (region, date, category); the nine metrics roll up from it (sums of
   * partial sums, max of partial maxes — decimal partial sums keep the means
-  * exact through the two levels) and the mode ranks the same tiny frame, so
-  * the day's partition is read once, not twice.
+  * exact through the two levels) and the mode is one more aggregate of the
+  * same roll-up, so the day's partition is read once and the result needs
+  * no cache, window or join.
   *
   * Semantics pinned to the reference:
   *   - means rounded 2-dp HALF-EVEN (Python `round(mean, 2)`, :69,72,75) —
@@ -33,20 +33,11 @@ object DailyInsights {
                             partN: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     bround(sum(partSum) / sum(partN), 2).cast("double")
 
-  /** CACHING CONTRACT: this method `persist()`s the shared fine-grained
-    * aggregate (tiny — |regions×dates×categories| rows) and cannot unpersist
-    * it before the caller materializes the lazily-returned Dataset. Callers
-    * that invoke it repeatedly in one session (the Runner, Verify and Bench
-    * already do) should `spark.catalog.clearCache()` after materializing, or
-    * cache entries accumulate one per invocation. Same contract as the
-    * persisting ExtQueries operators (minhashDedup / ngramJaccard /
-    * cosineDedup / cosineTopkLsh). */
   def compute(videos: Dataset[TrendingVideo]): Dataset[DailyInsight] = {
     val spark = videos.sparkSession
     import spark.implicits._
 
-    // ONE fine-grained aggregate; PERSISTED because both the metric roll-up
-    // and the mode ranking consume it (tiny: |regions×dates×categories|).
+    // ONE fine-grained aggregate, rolled up once per (region, date).
     // try_cast, not cast: ANSI mode (Spark 4 default) would abort the whole
     // day on the first non-numeric category string
     val byCat = videos.toDF()
@@ -63,9 +54,8 @@ object DailyInsights {
         sum(col("comments_count")).as("s_comments"),
         sum(col("comments_count").cast("decimal(28,6)")).as("d_comments"),
         max(col("comments_count")).as("m_comments"))
-      .persist()
 
-    val metrics = byCat
+    byCat
       .groupBy(col("region"), col("date"))
       .agg(
         sum(col("s_views")).as("total_views"),
@@ -76,30 +66,22 @@ object DailyInsights {
         max(col("m_likes")).as("highest_likes"),
         sum(col("s_comments")).as("total_comments"),
         avg2FromParts(col("d_comments"), col("n")).as("average_comments"),
-        max(col("m_comments")).as("highest_comments"))
-      .withColumn("engagement_ratio",
-        when(col("total_views") > 0,
-          (col("total_likes") + lit(2) * col("total_comments"))
-            .cast("double") / col("total_views") * lit(1000))
-          .otherwise(lit(0.0)))
-
-    // mode over the same cached frame; null categories get no vote
-    val w = Window.partitionBy(col("region"), col("date"))
-      .orderBy(col("n").desc, col("cat").asc)
-    val topCat = byCat
-      .filter(col("cat").isNotNull)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("region"), col("date"), col("cat").as("top_category_id"))
-
-    metrics.join(topCat, Seq("region", "date"), "left")
+        max(col("m_comments")).as("highest_comments"),
+        // the mode in the same pass: the least (-n, cat) is the most
+        // frequent category, ties to the lowest id; null categories get no
+        // vote (min skips the null the `when` leaves them)
+        min(when(col("cat").isNotNull, struct((-col("n")).as("neg_n"), col("cat").as("cat"))))
+          .as("top"))
       .select(
         col("region"), col("date"),
         col("total_views"), col("average_views"), col("highest_views"),
         col("total_likes"), col("average_likes"), col("highest_likes"),
         col("total_comments"), col("average_comments"), col("highest_comments"),
-        col("engagement_ratio"),
-        coalesce(col("top_category_id"), lit(-1L)).as("top_category_id"))
+        when(col("total_views") > 0,
+          (col("total_likes") + lit(2) * col("total_comments"))
+            .cast("double") / col("total_views") * lit(1000))
+          .otherwise(lit(0.0)).as("engagement_ratio"),
+        coalesce(col("top.cat"), lit(-1L)).as("top_category_id"))
       .as[DailyInsight]
   }
 }

@@ -1496,7 +1496,7 @@ object ExtQueries {
     *
     * CACHING CONTRACT: persists the signature frame; callers invoking
     * repeatedly in one session should clearCache() after materializing
-    * (see [[graft.agg.DailyInsights.compute]]). */
+    * (the file-default contract in the [[ExtQueries]] header). */
   def cosineDedup(spark: SparkSession, dir: String): DataFrame = {
     val vecs = table(spark, dir, "embeddings")
       .select(explode(array(

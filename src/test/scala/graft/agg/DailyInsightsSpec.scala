@@ -14,8 +14,8 @@ class DailyInsightsSpec extends AnyFunSuite {
   private val ts = Timestamp.valueOf("2025-10-05 10:00:00")
 
   private def video(region: String, id: String, likes: Long, views: Long = 1L,
-                    cat: String = "1"): TrendingVideo =
-    TrendingVideo(id, d, cat, "c", 0L, likes, views, 60L, "t", ts, region)
+                    cat: String = "1", date: Date = d): TrendingVideo =
+    TrendingVideo(id, date, cat, "c", 0L, likes, views, 60L, "t", ts, region)
 
   test("means round HALF-EVEN at exact .xx5 (Python round parity)") {
     import spark.implicits._
@@ -68,5 +68,33 @@ class DailyInsightsSpec extends AnyFunSuite {
     assert(out.engagement_ratio === 0.0)
     assert(out.total_views === 0L)
     assert(out.average_likes === 4.0)
+  }
+
+  test("mode is per (region, date) in one aggregate: count beats id, ties to lowest, nulls no vote") {
+    import spark.implicits._
+    val d2 = Date.valueOf("2025-10-07")
+    val vids = Seq(
+      // (A, d): 9 twice beats the lower id 5 once
+      video("A", "a1", 1L, cat = "9"), video("A", "a2", 1L, cat = "9"),
+      video("A", "a3", 1L, cat = "5"),
+      // (A, d2): 8 and 6 tie at two; three uncategorizable rows outnumber both
+      video("A", "a4", 2L, cat = "8", date = d2), video("A", "a5", 2L, cat = "8", date = d2),
+      video("A", "a6", 2L, cat = "6", date = d2), video("A", "a7", 2L, cat = "6", date = d2),
+      video("A", "a8", 2L, cat = null, date = d2), video("A", "a9", 2L, cat = "x", date = d2),
+      video("A", "a10", 2L, cat = null, date = d2),
+      // (B, d): 5 and 7 tie at one — pooled with (A, d) the mode would be 5
+      // by count, so a leak across regions would also show in A's answer
+      video("B", "b1", 4L, cat = "7"), video("B", "b2", 4L, cat = "5"),
+      // (B, d2): no categorized row
+      video("B", "b3", 8L, cat = null, date = d2))
+    val out = DailyInsights.compute(vids.toDS()).collect()
+      .map(i => (i.region, i.date) -> i).toMap
+    assert(out.size === 4)
+    assert(out(("A", d)).top_category_id === 9L)
+    assert(out(("A", d2)).top_category_id === 6L)
+    assert(out(("B", d)).top_category_id === 5L)
+    assert(out(("B", d2)).top_category_id === -1L)
+    assert(out.map { case (k, i) => k -> i.total_likes } ===
+      Map(("A", d) -> 3L, ("A", d2) -> 14L, ("B", d) -> 8L, ("B", d2) -> 8L))
   }
 }

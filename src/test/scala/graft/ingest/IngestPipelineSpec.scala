@@ -2,7 +2,11 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 import graft.pipeline.Runner
@@ -77,6 +81,42 @@ class IngestPipelineSpec extends AnyFunSuite {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** A raw day file and an empty warehouse: (JSON path, warehouse dir). */
+  private def landDay(): (String, String) = {
+    val path = s"${tmpDir("graft-raw")}/2025-10-06.json"
+    Files.writeString(Paths.get(path), rawJson)
+    (path, tmpDir("graft-wh"))
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched, counted by a
+    * listener on the job group `body` runs under. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    def inGroup[U](g: String)(f: => U): U = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = inGroup(group)(body)
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job `body` started has been seen too
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      (out, groups.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("flatten: nested JSON day -> typed video rows with reference edge cases") {
     val dir = tmpDir("graft-raw")
@@ -204,5 +244,47 @@ class IngestPipelineSpec extends AnyFunSuite {
     // aggregate re-run: skipped
     assert(Runner.runAggregateDay(spark, wh, runDate) === 0L)
     assert(spark.read.parquet(s"$wh/daily_insights").count() === 3L)
+  }
+
+  test("runner probe: dayExists reads the date directory; a loaded-day rerun launches no job") {
+    val (path, wh) = landDay()
+    val videosDir = s"$wh/daily_trending_videos"
+    assert(!Runner.dayExists(spark, videosDir, runDate))               // no table yet
+
+    // what a crashed write leaves behind: only `_`/`.`-prefixed entries
+    val dayDir = Paths.get(videosDir, s"date=$runDate")
+    Files.createDirectories(dayDir.resolve("_temporary/0"))
+    Files.writeString(dayDir.resolve(".part-00000.parquet.crc"), "")
+    assert(!Runner.dayExists(spark, videosDir, runDate))
+
+    assert(Runner.runIngestDay(spark, path, wh, runDate, regions, channelApi) === 6L)
+    assert(Runner.dayExists(spark, videosDir, runDate))
+    assert(!Runner.dayExists(spark, videosDir, runDate.plusDays(1)))   // only another date
+    assert(Runner.runAggregateDay(spark, wh, runDate) === 3L)
+
+    val api = channelApi
+    val (written, jobs) = jobsDuring {
+      Runner.runIngestDay(spark, path, wh, runDate, regions, api) +
+        Runner.runAggregateDay(spark, wh, runDate)
+    }
+    assert(written === 0L)
+    assert(jobs === 0)
+  }
+
+  test("runAggregateDay leaves the caller's cached frames cached") {
+    val (path, wh) = landDay()
+    assert(Runner.runIngestDay(spark, path, wh, runDate, regions, channelApi) === 6L)
+    val mine = spark.range(5).toDF("x").cache()
+    assert(mine.count() === 5L)
+    try {
+      assert(Runner.runAggregateDay(spark, wh, runDate) === 3L)
+      assert(mine.storageLevel !== StorageLevel.NONE)
+    } finally mine.unpersist()
+  }
+
+  test("a day with no rows for the run's regions writes nothing and returns 0") {
+    val (path, wh) = landDay()               // GB is absent from the file
+    assert(Runner.runIngestDay(spark, path, wh, runDate, Seq("GB"), channelApi) === 0L)
+    assert(Runner.runAggregateDay(spark, wh, runDate) === 0L)
   }
 }
