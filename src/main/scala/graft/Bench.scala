@@ -25,15 +25,8 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev-only key filter (comma-separated); the driver leaves it unset, so
-    // the recorded artifacts always cover the full key set
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS")
-      .map(_.split(',').map(_.trim).toSet)
-    val queries = keyFilter match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None => SparkEntry.queries
-    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val queries = GraftSession.selectedQueries
     // Harness-attribution memo (tools/BENCH_PROTOCOL.md): graded rank lists
     // materialize to this scratch dir once per bench JVM — the untimed
     // warmup populates it, so measured harness keys (e_ann_recall,
@@ -43,34 +36,9 @@ object Bench {
     // never set this property, so the correctness gate is untouched.
     val memoDir = java.nio.file.Files.createTempDirectory("graft-bench-memo")
     sys.props("graft.bench.memo") = memoDir.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // Teardown between runs OUTSIDE the timed window, in TWO layers:
-    // clearCache drops catalog-tracked DataFrame persists (weekly report,
-    // minhash, the similarity-join frames), and the explicit RDD sweep
-    // drops localCheckpoint blocks — the iterative operators (CC, PageRank,
-    // label propagation, greedy selection) release superseded rounds
-    // themselves, but their FINAL round's checkpoint stays alive after the
-    // result is consumed, and clearCache does not see RDD-level storage.
-    // Without the sweep that debris accumulates across the whole key set
-    // and whichever key runs after the iterative block pays its eviction
-    // (observed as a 3x swing on one composite key as the key count grew).
-    // blocking = true so the release lands before, not inside, the next
-    // key's timed window.
-    def teardown(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // fixed alphabetical key order: Map iteration order reshuffles whenever
     // a key is added, which silently changes every key's predecessor (and
     // therefore its JVM/GC context) between rounds — sorted order keeps
@@ -87,7 +55,7 @@ object Bench {
         try runOnce(fn) catch {
           case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: $e")
         }
-        teardown()
+        GraftSession.release(spark)
       }
     }
     // measure: per-query MEDIAN of 3 passes — observed run-to-run noise at
@@ -111,7 +79,7 @@ object Bench {
                 .map(c => if (c < ' ') ' ' else c).take(200)}"
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        teardown()
+        GraftSession.release(spark)
         name -> elapsed
       }.toMap
     }

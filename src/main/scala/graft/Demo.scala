@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import graft.agg.WeeklyReport
 import graft.pipeline.Runner
 import graft.schema.{DailyInsight, Schemas}
@@ -13,11 +12,7 @@ import graft.schema.{DailyInsight, Schemas}
   * `sbt "runMain graft.Demo"`. Writes only under java.io.tmpdir. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     import spark.implicits._
 
     val day1 = """{"QA":{"kind":"youtube#videoListResponse","items":[

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: write each named query's `.explain("formatted")` output to
@@ -7,9 +6,13 @@ import org.apache.spark.sql.execution.ExplainMode
   * optimization rounds commit under `plans/rNN/`. Run:
   * `sbt "runMain graft.PlanDump <outDir> <tag> key [key ...]"`.
   *
-  * Session config mirrors [[Bench]] (same shuffle partitions, extensions,
-  * timezone). Explain itself is driver-side, but CONSTRUCTING some frames
-  * runs jobs: the Louvain keys eagerly localCheckpoint their substrates
+  * Each key also prints one line: plan length, Exchange mentions and its
+  * distinct parquet scans; the PushedFilters and ReadSchema of every scan
+  * are in the written plan file.
+  *
+  * The session is [[GraftSession.local]], as in [[Bench]]. Explain
+  * itself is driver-side, but CONSTRUCTING some frames runs jobs: the
+  * Louvain keys eagerly localCheckpoint their substrates
   * when those are not memo-backed, so a default dump executes those pin
   * jobs and captures the full-lineage plan — NOT literally the plan the
   * bench executes (Bench sets `graft.bench.memo`, so its Louvain/harness
@@ -26,15 +29,8 @@ object PlanDump {
       val memoDir = java.nio.file.Files.createTempDirectory("graft-plandump-memo")
       sys.props("graft.bench.memo") = memoDir.toString
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- keys) {
       val plan = SparkEntry.queries(name)(spark, dir).queryExecution
@@ -42,7 +38,13 @@ object PlanDump {
       val p = java.nio.file.Paths.get(outDir, s"${name}_$tag.txt")
       java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       val exchanges = "Exchange".r.findAllIn(plan).size
-      println(s"$name: ${plan.linesIterator.size} lines, ~$exchanges Exchange mentions -> $p")
+      // DISTINCT node ids: formatted mode reprints a node wherever its
+      // subtree appears (e.g. inside each InMemoryRelation), so raw line
+      // counts overstate scans for persisted plans
+      val scans = """\((\d+)\) Scan parquet""".r
+        .findAllMatchIn(plan).map(_.group(1)).toSet.size
+      println(s"$name: ${plan.linesIterator.size} lines, ~$exchanges Exchange mentions, " +
+        s"$scans parquet scans -> $p")
     }
     spark.stop()
   }

@@ -1,46 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/selfcheck.py), and
+  * verify_failures.json: key → "<exception class>: <message>" for every
+  * key that threw (`{}` on a clean run; failures also go to stderr). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    // dev-only key filter (comma-separated), mirroring Bench: the driver
-    // leaves it unset, so driver dumps always cover the full key set
-    val keyFilter = sys.env.get("SPARK_GRAFT_KEYS")
-      .map(_.split(',').map(_.trim).toSet)
-    val queries = keyFilter match {
-      case Some(ks) => SparkEntry.queries.filter { case (k, _) => ks(k) }
-      case None => SparkEntry.queries
-    }
-    queries.foreach { case (name, fn) =>
+    val failures = scala.collection.mutable.Map.empty[String, String]
+    GraftSession.selectedQueries.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       } catch { case NonFatal(e) =>
+        failures(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
         // ALWAYS drop per-query persisted intermediates: a query that throws
         // after persisting (e.g. a convergence guard) must not leak its
-        // caches into every subsequent key's executor memory. The RDD sweep
-        // additionally drops localCheckpoint blocks (iterative operators'
-        // final rounds), which the catalog cache manager does not track.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        // caches into every subsequent key's executor memory
+        GraftSession.release(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -55,9 +37,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    // a file, not a directory: every subdirectory of outDir is a query dump
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"),
+      obj(failures.toSeq.sortBy(_._1)))
     spark.stop()
   }
 }

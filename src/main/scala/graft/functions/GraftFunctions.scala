@@ -1,13 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftColumns.{column, expression}
 
 /** Column-level helpers shared by every graft operator.
   *
   * Design rules (100 TB discipline):
   *   - everything here is a plain Catalyst column expression (codegen'd,
   *     no Scala UDF closures in hot paths);
+  *   - each kernel builder returns its expression class as a Column
+  *     directly (through [[org.apache.spark.sql.GraftColumns]]): there is
+  *     no SQL function registry, so a kernel column resolves in any
+  *     session, and the Scala signature fixes its arity and its literal
+  *     parameters;
   *   - all floating-point aggregates route through exact DECIMAL sums so the
   *     result is a deterministic IEEE value regardless of partition order —
   *     a 1000-executor shuffle must produce the same bytes as local[1]
@@ -15,311 +21,96 @@ import org.apache.spark.sql.functions._
   */
 object GraftFunctions {
 
-  private val registeredSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register graft's custom Catalyst expressions for SQL use. Idempotent
-    * AND once-per-session (re-registration would log a replaced-function
-    * warning on every call site). */
-  def register(spark: SparkSession): Unit = synchronized {
-    if (registeredSessions.add(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "iso_duration_seconds", exprs => ParseIso8601Duration(exprs.head), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "nanos_to_micros", exprs => NanosToMicros(exprs.head), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hyperplane_bands", { exprs =>
-          require(exprs.length == 3,
-            s"hyperplane_bands(vector, planes, bands) takes 3 arguments, got ${exprs.length}")
-          HyperplaneBands(exprs.head, litInt(exprs(1), "planes"), litInt(exprs(2), "bands"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "simhash_bits", { exprs =>
-          require(exprs.length == 2,
-            s"simhash_bits(token_hashes, bits) takes 2 arguments, got ${exprs.length}")
-          SimHashBits(exprs.head, litInt(exprs(1), "bits"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "minhash_sigs", { exprs =>
-          require(exprs.length == 2,
-            s"minhash_sigs(shingle_hashes, num_hashes) takes 2 arguments, got ${exprs.length}")
-          MinhashSigs(exprs.head, litInt(exprs(1), "num_hashes"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "intersect_count", { exprs =>
-          require(exprs.length == 2,
-            s"intersect_count(a, b) takes 2 arguments, got ${exprs.length}")
-          IntersectCount(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "intersect_count_distinct", { exprs =>
-          require(exprs.length == 2,
-            s"intersect_count_distinct(a, b) takes 2 arguments, got ${exprs.length}")
-          IntersectCountDistinct(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "distinct_count", { exprs =>
-          require(exprs.length == 1,
-            s"distinct_count(a) takes 1 argument, got ${exprs.length}")
-          DistinctCount(exprs.head)
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "intersect_count_sorted", { exprs =>
-          require(exprs.length == 2,
-            s"intersect_count_sorted(a, b) takes 2 arguments, got ${exprs.length}")
-          IntersectCountSorted(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "morton_interleave", { exprs =>
-          require(exprs.length == 3,
-            s"morton_interleave(x, y, bits) takes 3 arguments, got ${exprs.length}")
-          MortonInterleave(exprs.head, exprs(1), litInt(exprs(2), "bits"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dot", { exprs =>
-          require(exprs.length == 2,
-            s"vec_dot(a, b) takes 2 arguments, got ${exprs.length}")
-          VecDot(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_dist_sq", { exprs =>
-          require(exprs.length == 2,
-            s"vec_dist_sq(a, b) takes 2 arguments, got ${exprs.length}")
-          VecDistSq(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "vec_hamming", { exprs =>
-          require(exprs.length == 2,
-            s"vec_hamming(a, b) takes 2 arguments, got ${exprs.length}")
-          VecHamming(exprs.head, exprs(1))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hash31_tokens", { exprs =>
-          require(exprs.length == 1,
-            s"hash31_tokens(tokens) takes 1 argument, got ${exprs.length}")
-          Hash31Tokens(exprs.head)
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingle_poly", { exprs =>
-          require(exprs.length >= 2,
-            s"shingle_poly(th, c0, ...) takes 2+ arguments, got ${exprs.length}")
-          ShinglePoly(exprs.head, exprs.tail.map(litLong(_, "coefficient")))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "feature_hash_buckets", { exprs =>
-          require(exprs.length == 2,
-            s"feature_hash_buckets(th, dim) takes 2 arguments, got ${exprs.length}")
-          FeatureHashBuckets(exprs.head, litInt(exprs(1), "dim"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "bigram_hashes", { exprs =>
-          require(exprs.length == 1,
-            s"bigram_hashes(tk) takes 1 argument, got ${exprs.length}")
-          BigramHashes(exprs.head)
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "char_qgrams", { exprs =>
-          require(exprs.length == 2,
-            s"char_qgrams(s, q) takes 2 arguments, got ${exprs.length}")
-          CharQGrams(exprs.head, litInt(exprs(1), "q"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "phash_sim", { exprs =>
-          require(exprs.length == 4,
-            s"phash_sim(ptxt, cells, bands, mod) takes 4 arguments, got ${exprs.length}")
-          PhashSim(exprs.head, litInt(exprs(1), "cells"), litInt(exprs(2), "bands"),
-            litLong(exprs(3), "mod"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "window_hash64", { exprs =>
-          require(exprs.length == 4,
-            s"window_hash64(tk, win, stride, clip) takes 4 arguments, got ${exprs.length}")
-          WindowHash64(exprs.head, litInt(exprs(1), "win"),
-            litInt(exprs(2), "stride"), litBool(exprs(3), "clip"))
-        }, "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "poly_fold", { exprs =>
-          require(exprs.length == 3,
-            s"poly_fold(th, b, m) takes 3 arguments, got ${exprs.length}")
-          PolyFold(exprs.head, litLong(exprs(1), "base"), litLong(exprs(2), "modulus"))
-        }, "scala_udf")
-    }
-  }
-
-  private def litInt(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                     what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"hyperplane_bands: $what must be an integer literal, got $other")
-  }
-
-  private def litBool(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                      what: String): Boolean = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Boolean, _) => v
-    case other => throw new IllegalArgumentException(
-      s"window_hash64: $what must be a boolean literal, got $other")
-  }
-
-  private def litLong(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                      what: String): Long = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-    case other => throw new IllegalArgumentException(
-      s"shingle_poly: $what must be a long literal, got $other")
-  }
-
   /** LSH band bucket values for an embedding column — one fused pass over
     * the vector for ALL hyperplane projections ([[HyperplaneLsh]]). */
-  def hyperplaneBands(spark: SparkSession, c: Column, planes: Int, bands: Int): Column = {
-    register(spark)
-    call_function("hyperplane_bands", c, lit(planes), lit(bands))
-  }
+  def hyperplaneBands(c: Column, planes: Int, bands: Int): Column =
+    column(HyperplaneBands(expression(c), planes, bands))
 
   /** SimHash signature for a token-hash array — one fused pass over the
     * array for ALL signature bits ([[SimHashLsh]]). */
-  def simhashBits(spark: SparkSession, c: Column, bits: Int): Column = {
-    register(spark)
-    call_function("simhash_bits", c, lit(bits))
-  }
+  def simhashBits(c: Column, bits: Int): Column = column(SimHashBits(expression(c), bits))
 
   /** MinHash signature for a shingle-hash array — one fused pass over the
     * array for ALL hash functions ([[MinhashLsh]]). */
-  def minhashSigs(spark: SparkSession, c: Column, numHashes: Int): Column = {
-    register(spark)
-    call_function("minhash_sigs", c, lit(numHashes))
-  }
+  def minhashSigs(c: Column, numHashes: Int): Column = column(MinhashSigs(expression(c), numHashes))
 
   /** Morton (Z-order) interleave of two long columns' low `bits` bits —
     * one fused loop for the whole key ([[Morton]]). */
-  def mortonInterleave(spark: SparkSession, x: Column, y: Column, bits: Int): Column = {
-    register(spark)
-    call_function("morton_interleave", x, y, lit(bits))
-  }
+  def mortonInterleave(x: Column, y: Column, bits: Int): Column =
+    column(MortonInterleave(expression(x), expression(y), bits))
 
   /** Sequential-fold dot product of two float/double array columns — the
     * codegen'd cosine kernel ([[VecOps]]; bit-identical to the interpreted
-    * `aggregate(zip_with(…))` stack it replaces). Session-less on purpose:
-    * the expression-tree helpers (`l2norm`, the per-pair cosines) build
-    * columns with no SparkSession parameter in scope, and registration only
-    * needs to land before ANALYSIS — the active/default session at
-    * construction time is that session. */
-  def vecDot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("vec_dot", a, b)
-  }
+    * `aggregate(zip_with(…))` stack it replaces). */
+  def vecDot(a: Column, b: Column): Column = column(VecDot(expression(a), expression(b)))
 
   /** Sequential-fold squared Euclidean distance of two float/double array
     * columns ([[VecOps.distSq]] — bit-identical to the interpreted
     * `(x−y)·(x−y)` zip_with fold it replaces). */
-  def vecDistSq(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("vec_dist_sq", a, b)
-  }
+  def vecDistSq(a: Column, b: Column): Column = column(VecDistSq(expression(a), expression(b)))
 
   /** Hamming weight of the elementwise XOR of two `array<long>` signature
     * columns ([[VecOps.hamming]] — exact integer fold). */
-  def vecHamming(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("vec_hamming", a, b)
-  }
+  def vecHamming(a: Column, b: Column): Column = column(VecHamming(expression(a), expression(b)))
 
   /** Per-token [[hash31]] values of an `array<string>` column in one
     * codegen'd pass ([[TokenHash.hash31All]] — bit-identical to the
     * interpreted `transform(tk, t => hash31(t))` it replaces). */
-  def hash31Tokens(tk: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("hash31_tokens", tk)
-  }
+  def hash31Tokens(tk: Column): Column = column(Hash31Tokens(expression(tk)))
 
   /** Polynomial k-gram hashes over a token-hash array column
     * ([[TokenHash.shinglePoly]] — the ShingleC per-term-mod arithmetic in
     * one codegen'd pass). */
-  def shinglePoly(th: Column, coeffs: Seq[Long]): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("shingle_poly", (th +: coeffs.map(c => lit(c))): _*)
-  }
+  def shinglePoly(th: Column, coeffs: Seq[Long]): Column =
+    column(ShinglePoly(expression(th), coeffs))
 
   /** All hashing-trick bucket sums of a token-hash array in one pass
     * ([[TokenHash.featureHashAll]]). */
-  def featureHashBuckets(th: Column, dim: Int): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("feature_hash_buckets", th, lit(dim))
-  }
+  def featureHashBuckets(th: Column, dim: Int): Column =
+    column(FeatureHashBuckets(expression(th), dim))
 
   /** All (h_prev, h_bigram) hash pairs of a token array column in one
     * pass ([[TokenHash.bigramHashes]]). */
-  def bigramHashes(tk: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("bigram_hashes", tk)
-  }
+  def bigramHashes(tk: Column): Column = column(BigramHashes(expression(tk)))
 
   /** All positional q-grams of a string column in one pass
     * ([[TokenHash.charQGrams]]). */
-  def charQGrams(s: Column, q: Int): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("char_qgrams", s, lit(q))
-  }
+  def charQGrams(s: Column, q: Int): Column = column(CharQGrams(expression(s), q))
 
   /** Perceptual-hash band signature of a decoded payload string in one
     * pass ([[TokenHash.phashSim]]). */
-  def phashSim(ptxt: Column, cells: Int, bands: Int, mod: Long): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("phash_sim", ptxt, lit(cells), lit(bands), lit(mod))
-  }
+  def phashSim(ptxt: Column, cells: Int, bands: Int, mod: Long): Column =
+    column(PhashSim(expression(ptxt), cells, bands, mod))
 
   /** Per-window md5-based 60-bit hashes of space-joined token windows
     * ([[TokenHash.windowHash64]]). */
-  def windowHash64(tk: Column, win: Int, stride: Int, clip: Boolean): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("window_hash64", tk, lit(win), lit(stride), lit(clip))
-  }
+  def windowHash64(tk: Column, win: Int, stride: Int, clip: Boolean): Column =
+    column(WindowHash64(expression(tk), win, stride, clip))
 
   /** Sequential polynomial rolling fold (acc·b + h) mod m over a
     * token-hash array ([[TokenHash.polyFold]]). */
-  def polyFold(th: Column, b: Long, m: Long): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("poly_fold", th, lit(b), lit(m))
-  }
+  def polyFold(th: Column, b: Long, m: Long): Column = column(PolyFold(expression(th), b, m))
 
   /** Set-intersection cardinality of two long-array SETS — the Jaccard
     * verify counting kernel ([[SetOps.intersectCount]]); inputs must hold
     * distinct elements (every builder in the repo guarantees it). */
-  def intersectCount(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("intersect_count", a, b)
-  }
+  def intersectCount(a: Column, b: Column): Column =
+    column(IntersectCount(expression(a), expression(b)))
 
   /** Sorted-set intersection cardinality ([[SetOps.intersectCountSorted]]):
     * both arrays must be ascending-sorted (`array_sort` order). Sort each
     * set once at materialization; every probe is then one linear merge with
     * no per-pair scratch buffer — the verify kernel for similarity joins
     * that probe the same sets millions of times. */
-  def intersectCountSorted(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("intersect_count_sorted", a, b)
-  }
+  def intersectCountSorted(a: Column, b: Column): Column =
+    column(IntersectCountSorted(expression(a), expression(b)))
 
   /** Floor-division nanos→micros via the named [[NanosToMicros]] expression —
     * the node [[graft.plans.NanosDatePushdown]] keys its rewrite on. */
-  def nanosToMicros(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("nanos_to_micros", c)
-  }
+  def nanosToMicros(c: Column): Column = column(NanosToMicros(expression(c)))
 
   /** ISO-8601 duration string → seconds (custom Catalyst expression, §2.8 F1). */
-  def isoDurationSeconds(c: Column): Column = call_function("iso_duration_seconds", c)
+  def isoDurationSeconds(c: Column): Column = column(ParseIso8601Duration(expression(c)))
 
   /** Deterministic, cross-engine 64-bit content hash: first 15 hex chars of
     * md5 → non-negative long in [0, 2^60). Chosen because DuckDB computes the

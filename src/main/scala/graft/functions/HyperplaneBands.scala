@@ -79,8 +79,7 @@ object HyperplaneLsh {
 
 /** Catalyst-native expression wrapping [[HyperplaneLsh.bandBuckets]] — a
   * static call, so it stays inside whole-stage codegen like
-  * [[ParseIso8601Duration]]. Registered as SQL function `hyperplane_bands`
-  * via [[GraftFunctions.register]].
+  * [[ParseIso8601Duration]]. Built by [[GraftFunctions.hyperplaneBands]].
   */
 case class HyperplaneBands(child: Expression, planes: Int, bands: Int)
     extends UnaryExpression {

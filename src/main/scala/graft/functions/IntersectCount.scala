@@ -216,8 +216,8 @@ object SetOps {
 }
 
 /** Catalyst-native wrapper over [[SetOps.intersectCount]] — a static call,
-  * so it stays inside whole-stage codegen. Registered as SQL function
-  * `intersect_count` via [[GraftFunctions.register]]. */
+  * so it stays inside whole-stage codegen. Built by
+  * [[GraftFunctions.intersectCount]]. */
 case class IntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -265,8 +265,7 @@ case class IntersectCount(left: Expression, right: Expression)
 
 /** Catalyst-native wrapper over [[SetOps.intersectCountDistinct]] — the
   * MULTISET-correct form equal to `size(array_intersect(a, b))` on any
-  * input. Planted by [[graft.plans.SetIntersectCountRewrite]]; also
-  * callable directly as SQL `intersect_count_distinct`. */
+  * input. Planted by [[graft.plans.SetIntersectCountRewrite]]. */
 case class IntersectCountDistinct(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -299,8 +298,7 @@ case class IntersectCountDistinct(left: Expression, right: Expression)
 
 /** Catalyst-native wrapper over [[SetOps.distinctCount]] — equal to
   * `size(array_distinct(a))` on any long-array input. Planted by
-  * [[graft.plans.SetIntersectCountRewrite]]; also callable directly as
-  * SQL `distinct_count`. */
+  * [[graft.plans.SetIntersectCountRewrite]]. */
 case class DistinctCount(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -328,8 +326,8 @@ case class DistinctCount(child: Expression) extends UnaryExpression {
 
 /** Catalyst-native wrapper over [[SetOps.intersectCountSorted]] — same
   * contract as [[IntersectCount]] but requires BOTH inputs ascending-sorted
-  * (null last, `array_sort` order); the caller owns the sort. Registered as
-  * SQL function `intersect_count_sorted`. */
+  * (null last, `array_sort` order); the caller owns the sort. Built by
+  * [[GraftFunctions.intersectCountSorted]]. */
 case class IntersectCountSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -61,7 +61,7 @@ object MinhashLsh {
 
 /** Catalyst-native expression wrapping [[MinhashLsh.signature]] — a static
   * call, so it stays inside whole-stage codegen like [[SimHashBits]].
-  * Registered as SQL function `minhash_sigs` via [[GraftFunctions.register]].
+  * Built by [[GraftFunctions.minhashSigs]].
   */
 case class MinhashSigs(child: Expression, numHashes: Int) extends UnaryExpression {
 

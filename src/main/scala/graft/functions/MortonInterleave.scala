@@ -32,8 +32,8 @@ object Morton {
 }
 
 /** Catalyst-native wrapper over [[Morton.interleave]] — a static call, so
-  * it stays inside whole-stage codegen. Registered as SQL function
-  * `morton_interleave` via [[GraftFunctions.register]]. */
+  * it stays inside whole-stage codegen. Built by
+  * [[GraftFunctions.mortonInterleave]]. */
 case class MortonInterleave(left: Expression, right: Expression, bits: Int)
     extends BinaryExpression {
 

@@ -54,7 +54,7 @@ object SimHashLsh {
 
 /** Catalyst-native expression wrapping [[SimHashLsh.signature]] — a static
   * call, so it stays inside whole-stage codegen like [[HyperplaneBands]].
-  * Registered as SQL function `simhash_bits` via [[GraftFunctions.register]].
+  * Built by [[GraftFunctions.simhashBits]].
   */
 case class SimHashBits(child: Expression, bits: Int) extends UnaryExpression {
 

@@ -191,7 +191,8 @@ object TokenHash {
   /** All positional q-grams of a string in one pass — replaces
     * `transform(sequence(1, len−q+1), i -> substring(k, i, q))`, which
     * re-ran the interpreted substring stack per position. Code-point
-    * boundaries (Spark `length`/`substring` semantics); for
+    * boundaries (Spark `length`/`substring` semantics, walked with Spark's
+    * own lead-byte table, so malformed UTF-8 splits as Spark splits it); for
     * len < q the sequence(1, len−q+1) formulation still emits windows for
     * the descending sequence — callers guard len ≥ q (enforced upstream by
     * the EditMinKeyLen filter), so this kernel emits max(0, len−q+1)
@@ -204,11 +205,7 @@ object TokenHash {
     var off = 0
     while (i < n) {
       cp(i) = off
-      val b = bytes(off)
-      off += (if ((b & 0x80) == 0) 1
-              else if ((b & 0xe0) == 0xc0) 2
-              else if ((b & 0xf0) == 0xe0) 3
-              else 4)
+      off += UTF8String.numBytesForFirstByte(bytes(off))
       i += 1
     }
     cp(n) = bytes.length
@@ -246,11 +243,7 @@ object TokenHash {
     var off = 0
     while (i < n) {
       cp(i) = off
-      val b = bytes(off)
-      off += (if ((b & 0x80) == 0) 1
-              else if ((b & 0xe0) == 0xc0) 2
-              else if ((b & 0xf0) == 0xe0) 3
-              else 4)
+      off += UTF8String.numBytesForFirstByte(bytes(off))
       i += 1
     }
     cp(n) = bytes.length
@@ -313,7 +306,7 @@ object TokenHash {
 }
 
 /** Catalyst-native `hash31_tokens(tk)` — see [[TokenHash.hash31All]].
-  * Registered via [[GraftFunctions.register]]. */
+  * Built by [[GraftFunctions.hash31Tokens]]. */
 case class Hash31Tokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def nullable: Boolean = child.nullable

@@ -93,8 +93,8 @@ object VecOps {
   }
 }
 
-/** Catalyst-native `vec_dot(a, b)` — see [[VecOps]]. Registered via
-  * [[GraftFunctions.register]]. */
+/** Catalyst-native `vec_dot(a, b)` — see [[VecOps]]. Built by
+  * [[GraftFunctions.vecDot]]. */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
 
   private def isFloat(e: Expression): Boolean = e.dataType match {

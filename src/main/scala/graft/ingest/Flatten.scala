@@ -4,7 +4,7 @@ import java.sql.Date
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.{isoDurationSeconds, register}
+import graft.functions.GraftFunctions.isoDurationSeconds
 import graft.schema.{Schemas, TrendingVideo}
 
 /** S4 + P1–P3 + F1–F3 + U1: the reference's front door — the day's nested
@@ -59,7 +59,6 @@ object Flatten {
     *                SURVEY §7.6 #5). */
   def flatten(raw: DataFrame, regions: Seq[String], runDate: LocalDate): Dataset[TrendingVideo] = {
     val spark = raw.sparkSession
-    register(spark)
     import spark.implicits._
     val perRegion = itemsPerRegion(raw, regions)
     perRegion.select(

@@ -601,7 +601,7 @@ object ExtQueries {
       .agg(count(lit(1)).as("n_queries"))
     // LSH: distinct band-bucket candidate pairs (the set the operator
     // verifies — dedup-before-score is the canonical accounting)
-    val bands = withBandBuckets(spark,
+    val bands = withBandBuckets(
         emb.select(col("vec_id"), col("embedding").as("e")), AnnPlanes, AnnBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lshC = bands
@@ -939,8 +939,7 @@ object ExtQueries {
   private[graft] def minhashBands(shd: DataFrame, persist: Boolean = true): DataFrame = {
     val sigs = shd
       .select(col("doc_id"),
-        graft.functions.GraftFunctions.minhashSigs(
-          shd.sparkSession, col("ds"), NumHashes).as("sig"))
+        graft.functions.GraftFunctions.minhashSigs(col("ds"), NumHashes).as("sig"))
     val bands = sigs.select(
       col("doc_id"),
       explode(array((0 until NumBands).map { b =>
@@ -966,7 +965,7 @@ object ExtQueries {
       // materialized intersection array); |∪| = |A| + |B| − |∩| replaces
       // the array_union materialization — sets, so the identity is exact
       .withColumn("n_inter",
-        intersectCount(cand.sparkSession, col("ds_a"), col("ds_b")).cast("int"))
+        intersectCount(col("ds_a"), col("ds_b")).cast("int"))
       .select(
         col("doc_a"), col("doc_b"), col("n_inter"),
         (size(col("ds_a")) + size(col("ds_b")) - col("n_inter")).as("n_union"))
@@ -1028,7 +1027,7 @@ object ExtQueries {
       .join(corpusShd.select(col("doc_id").as("doc_a"), col("ds").as("ds_a")), Seq("doc_a"))
       .join(batchShd.select(col("doc_id").as("doc_b"), col("ds").as("ds_b")), Seq("doc_b"))
       .withColumn("n_inter",
-        intersectCount(cand.sparkSession, col("ds_a"), col("ds_b")).cast("int"))
+        intersectCount(col("ds_a"), col("ds_b")).cast("int"))
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
         (size(col("ds_a")) + size(col("ds_b")) - col("n_inter")).as("n_union"))
       .filter(lit(2) * col("n_inter") >= col("n_union"))
@@ -1054,7 +1053,7 @@ object ExtQueries {
     // replaced for the cosine family
     val sigs = toked
       .select(col("doc_id"),
-        graft.functions.GraftFunctions.simhashBits(spark, col("th"), 32).as("sim"))
+        graft.functions.GraftFunctions.simhashBits(col("th"), 32).as("sim"))
       .persist()
 
     val bands = sigs.select(col("doc_id"), col("sim"),
@@ -1341,8 +1340,7 @@ object ExtQueries {
       .join(sets.select(col("doc_id").as("doc_a"), col("bs").as("bs_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("bs").as("bs_b")), Seq("doc_b"))
       .withColumn("n_inter",
-        graft.functions.GraftFunctions.intersectCountSorted(
-          spark, col("bs_a"), col("bs_b")))
+        graft.functions.GraftFunctions.intersectCountSorted(col("bs_a"), col("bs_b")))
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
         (size(col("bs_a")).cast("long") + size(col("bs_b")).cast("long")
           - col("n_inter")).as("n_union"))
@@ -1408,11 +1406,10 @@ object ExtQueries {
     * from the fused single-pass [[graft.functions.HyperplaneLsh]] signature
     * (replaces per-plane interpreted zip_with folds — the bench's former
     * hottest scan). */
-  private def withBandBuckets(spark: SparkSession, vecs: DataFrame,
-                              planes: Int, bands: Int): DataFrame =
+  private def withBandBuckets(vecs: DataFrame, planes: Int, bands: Int): DataFrame =
     vecs
       .select(col("vec_id"), col("e"), l2norm(col("e")).as("nrm"),
-        graft.functions.GraftFunctions.hyperplaneBands(spark, col("e"), planes, bands).as("bvs"))
+        graft.functions.GraftFunctions.hyperplaneBands(col("e"), planes, bands).as("bvs"))
       .select(col("vec_id"), col("e"), col("nrm"), posexplode(col("bvs")))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bv")
@@ -1472,7 +1469,7 @@ object ExtQueries {
       .join(shd.select(col("doc_id").as("doc_a"), col("ds").as("ds_a")), Seq("doc_a"))
       .join(shd.select(col("doc_id").as("doc_b"), col("ds").as("ds_b")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        intersectCount(cand.sparkSession, col("ds_a"), col("ds_b"))
+        intersectCount(col("ds_a"), col("ds_b"))
           .cast("int").as("n_inter"),
         size(col("ds_a")).as("n_a"), size(col("ds_b")).as("n_b"))
       .filter(lit(5) * col("n_inter") >= lit(4) * least(col("n_a"), col("n_b")))
@@ -1510,7 +1507,7 @@ object ExtQueries {
     // Norms are computed ONCE per vector here, not per candidate pair — at
     // |candidates| ≫ |vectors| that cuts two of the three folds per pair.
     // PERSISTED: both sides of the bucket self-join probe it.
-    val bands = withBandBuckets(spark, vecs, DedupPlanes, DedupBands)
+    val bands = withBandBuckets(vecs, DedupPlanes, DedupBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val dot = dotD(col("x.e"), col("y.e"))
@@ -1549,7 +1546,7 @@ object ExtQueries {
   def cosineTopkLsh(spark: SparkSession, dir: String): DataFrame = {
     val vecs = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("e"))
-    val bands = withBandBuckets(spark, vecs, AnnPlanes, AnnBands)
+    val bands = withBandBuckets(vecs, AnnPlanes, AnnBands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val q = bands.filter(col("vec_id") < 8)
@@ -4282,16 +4279,22 @@ object ExtQueries {
     * [[FhDim]]-element fold over the token-hash array inside the
     * projection, and the generator fans out FhDim slim rows per document.
     * Zero shuffles before the output sort; no vocabulary state at all
-    * (the point of the hashing trick). */
+    * (the point of the hashing trick).
+    *
+    * Every document gets exactly [[FhDim]] rows: a null-text document has
+    * no tokens, so its vector is all zeros (v = 0 in every bucket), as in
+    * the oracle. */
   def featureHash(spark: SparkSession, dir: String): DataFrame =
     // all FhDim bucket sums in ONE codegen'd pass over the token-hash
     // array (round 18; the per-bucket interpreted fold walked the array
-    // FhDim times per document) — posexplode's 0-based pos IS the bucket
+    // FhDim times per document) — posexplode's 0-based pos IS the bucket;
+    // the coalesce keeps a null-text document's FhDim rows
     table(spark, dir, "documents")
       .select(col("doc_id"),
-        posexplode(graft.functions.GraftFunctions.featureHashBuckets(
-          graft.functions.GraftFunctions.hash31Tokens(tokens(col("text"))),
-          FhDim.toInt)))
+        posexplode(coalesce(
+          graft.functions.GraftFunctions.featureHashBuckets(
+            graft.functions.GraftFunctions.hash31Tokens(tokens(col("text"))), FhDim.toInt),
+          array_repeat(lit(0L), FhDim.toInt))))
       .select(col("doc_id"), col("pos").cast("long").as("bucket"),
         col("col").as("v"))
       .orderBy("doc_id", "bucket")
@@ -5245,7 +5248,7 @@ object ExtQueries {
         pmod(col("user_id"), lit(65536L)).as("uid16"),
         pmod(expr("unix_micros(ts) div 86400000000"), lit(65536L)).as("day16"))
     dims.select(col("event_id"), col("uid16"), col("day16"),
-        mortonInterleave(spark, col("uid16"), col("day16"), ZOrderBits).as("zkey"))
+        mortonInterleave(col("uid16"), col("day16"), ZOrderBits).as("zkey"))
       .orderBy("zkey", "event_id")
   }
 

@@ -72,7 +72,7 @@ object RefQueries {
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       df.schema("ts").dataType match {
         case LongType =>      // TIMESTAMP_NS fixture read raw via nanosAsLong
-          df.withColumn("ts", timestamp_micros(nanosToMicros(spark, col("ts"))))
+          df.withColumn("ts", timestamp_micros(nanosToMicros(col("ts"))))
         case TimestampNTZType => // TIMESTAMP_MICROS fixture; UTC session ⇒ same micros
           df.withColumn("ts", col("ts").cast(TimestampType))
         case TimestampType => df
@@ -633,7 +633,6 @@ object RefQueries {
     * reference's `isodate.parse_duration` handles; the oracle computes the
     * expected seconds arithmetically — an independent ground truth. */
   def ptDuration(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
     val ev = table(spark, dir, "events")
     val d = (col("event_id") % 3).cast("string")
     val h = (col("user_id") % 24).cast("string")

@@ -50,7 +50,7 @@ class HyperplaneBandsSpec extends AnyFunSuite {
     val df = Seq((1L, sample.map(_.toFloat)), (2L, sample.map(x => -x.toFloat)))
       .toDF("id", "e")
     val rows = df
-      .select($"id", GraftFunctions.hyperplaneBands(spark, $"e", 64, 4).as("bvs"))
+      .select($"id", GraftFunctions.hyperplaneBands($"e", 64, 4).as("bvs"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[Long](1).toArray === reference(sample, 64, 4))
     assert(rows(1).getSeq[Long](1).toArray === reference(sample.map(-_), 64, 4))

@@ -35,13 +35,13 @@ class IntersectCountSpec extends AnyFunSuite {
       .map { case (id, a, b) => (id, a.toArray, b.toArray) }
       .toDF("id", "a", "b")
     val rows = df.select($"id",
-        GraftFunctions.intersectCount(spark, $"a", $"b").as("c"),
+        GraftFunctions.intersectCount($"a", $"b").as("c"),
         size(array_intersect($"a", $"b")).cast("long").as("want"))
       .orderBy("id").collect()
     rows.foreach(r => assert(r.getLong(1) === r.getLong(2), s"id=${r.getLong(0)}"))
     // null array → null result through the standard null-safe path
     val n = df.select(
-      GraftFunctions.intersectCount(spark, lit(null).cast("array<bigint>"), $"b")
+      GraftFunctions.intersectCount(lit(null).cast("array<bigint>"), $"b")
         .as("c")).limit(1).collect().head
     assert(n.isNullAt(0))
   }
@@ -68,7 +68,7 @@ class IntersectCountSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
       .select($"id", array_sort($"a").as("a"), array_sort($"b").as("b"))
     val rows = df.select($"id",
-        GraftFunctions.intersectCountSorted(spark, $"a", $"b").as("c"),
+        GraftFunctions.intersectCountSorted($"a", $"b").as("c"),
         size(array_intersect($"a", $"b")).cast("long").as("want"))
       .orderBy("id").collect()
     rows.foreach(r => assert(r.getLong(1) === r.getLong(2), s"id=${r.getLong(0)}"))
@@ -80,7 +80,7 @@ class IntersectCountSpec extends AnyFunSuite {
       .toDF("id", "a", "b")
       .select($"id", array_sort($"a").as("a"), array_sort($"b").as("b"))
     val nrows = ndf.select($"id",
-        GraftFunctions.intersectCountSorted(spark, $"a", $"b").as("c"))
+        GraftFunctions.intersectCountSorted($"a", $"b").as("c"))
       .orderBy("id").collect()
     assert(nrows.map(_.getLong(1)).toSeq === Seq(2L, 0L))
   }
@@ -101,7 +101,7 @@ class IntersectCountSpec extends AnyFunSuite {
     assert(df.schema("a").dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull)
     val rows = df.select($"id",
-        GraftFunctions.intersectCount(spark, $"a", $"b").as("c"),
+        GraftFunctions.intersectCount($"a", $"b").as("c"),
         size(array_intersect($"a", $"b")).cast("long").as("want"))
       .orderBy("id").collect()
     rows.foreach(r => assert(r.getLong(1) === r.getLong(2), s"id=${r.getLong(0)}"))
@@ -113,7 +113,7 @@ class IntersectCountSpec extends AnyFunSuite {
     // so drive the expression from a range source
     val df = spark.range(0, 4)
       .select(array(col("id"), col("id") + 1).as("a"), array(col("id")).as("b"))
-      .select(GraftFunctions.intersectCount(spark, col("a"), col("b")).as("c"))
+      .select(GraftFunctions.intersectCount(col("a"), col("b")).as("c"))
     // the `*(n)` prefix is the executedPlan.toString marker for operators
     // inside a WholeStageCodegen stage
     val plan = df.queryExecution.executedPlan.toString

@@ -41,7 +41,7 @@ class MinhashSigsSpec extends AnyFunSuite {
     val other = sample.map(h => (h * 31L + 7L) % P)
     val rows = Seq((1L, sample), (2L, other))
       .toDF("id", "ds")
-      .select($"id", GraftFunctions.minhashSigs(spark, $"ds", 16).as("sig"))
+      .select($"id", GraftFunctions.minhashSigs($"ds", 16).as("sig"))
       .orderBy("id").collect()
     assert(rows(0).getSeq[Long](1) === reference(sample.toSeq, 16))
     assert(rows(1).getSeq[Long](1) === reference(other.toSeq, 16))

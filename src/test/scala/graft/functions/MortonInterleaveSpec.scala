@@ -35,7 +35,7 @@ class MortonInterleaveSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq((1L, 3L, 5L), (2L, 65535L, 65535L), (3L, 1024L, 19723L))
       .toDF("id", "x", "y")
-      .select($"id", GraftFunctions.mortonInterleave(spark, $"x", $"y", 16).as("z"))
+      .select($"id", GraftFunctions.mortonInterleave($"x", $"y", 16).as("z"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) === 27L)
     assert(rows(1).getLong(1) === 0xFFFFFFFFL)

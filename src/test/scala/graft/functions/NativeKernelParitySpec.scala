@@ -17,6 +17,14 @@ class NativeKernelParitySpec extends AnyFunSuite {
   private def seqSum(arr: org.apache.spark.sql.Column) =
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
+  /** Malformed UTF-8 rows (stray continuation bytes at the start, middle
+    * and end; a byte that cannot lead a sequence): Spark counts each such
+    * byte as one code point, and the string kernels must split the same. */
+  private def malformed(firstId: Long, name: String) =
+    Seq("8061626364", "6162806364", "61626380", "61ff626364", "80616263" * 20)
+      .zipWithIndex.map { case (h, i) => (firstId + i, h) }.toDF("id", "hex")
+      .select(col("id"), unhex(col("hex")).cast("string").as(name))
+
   private val rnd = new scala.util.Random(181181L)
   private def fvec(n: Int): Seq[Float] = Seq.fill(n)(rnd.nextFloat() * 2 - 1)
 
@@ -145,7 +153,8 @@ class NativeKernelParitySpec extends AnyFunSuite {
     val rows = (1 to 100).map { i =>
       (i.toLong, Seq.fill(1 + rnd.nextInt(15))(pieces(rnd.nextInt(pieces.size))).mkString)
     }
-    val df = rows.toDF("id", "k").withColumn("len", length(col("k")))
+    val df = rows.toDF("id", "k").union(malformed(9001L, "k"))
+      .withColumn("len", length(col("k")))
     val hof = expr("transform(sequence(1, len - 2), i -> substring(k, i, 3))")
     val diff = df.filter(col("len") >= 3)
       .select(col("id"), hof.as("h"), GraftFunctions.charQGrams(col("k"), 3).as("n"))
@@ -158,7 +167,8 @@ class NativeKernelParitySpec extends AnyFunSuite {
     val rows = (1 to 80).map { i =>
       (i.toLong, Seq.fill(rnd.nextInt(40))(pieces(rnd.nextInt(pieces.size))).mkString)
     } :+ (9001L, "")
-    val df = rows.toDF("id", "ptxt").withColumn("n", length(col("ptxt")).cast("long"))
+    val df = rows.toDF("id", "ptxt").union(malformed(9101L, "ptxt"))
+      .withColumn("n", length(col("ptxt")).cast("long"))
     def cdiv(x: org.apache.spark.sql.Column) =
       floor(x.cast("double") / lit(64.0)).cast("long")
     val cells = transform(sequence(lit(0L), lit(63L)), i => {

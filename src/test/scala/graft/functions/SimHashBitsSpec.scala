@@ -35,7 +35,7 @@ class SimHashBitsSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq((1L, sample), (2L, sample.map(~_ & 0x7FFFFFFFL)))
       .toDF("id", "th")
-      .select($"id", GraftFunctions.simhashBits(spark, $"th", 32).as("sim"))
+      .select($"id", GraftFunctions.simhashBits($"th", 32).as("sim"))
       .orderBy("id").collect()
     assert(rows(0).getLong(1) === reference(sample.toSeq, 32))
     assert(rows(1).getLong(1) === reference(sample.map(~_ & 0x7FFFFFFFL).toSeq, 32))

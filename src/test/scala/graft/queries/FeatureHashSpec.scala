@@ -41,6 +41,17 @@ class FeatureHashSpec extends AnyFunSuite {
     }
   }
 
+  test("a null-text document gets FhDim zero rows, as in the oracle") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fh-null").toString
+    Seq((1L, Option("alpha beta alpha")), (2L, Option.empty[String])).toDF("doc_id", "text")
+      .write.parquet(s"$tmp/documents.parquet")
+    val got = ExtQueries.featureHash(spark, tmp).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.filter(_._1 == 2L).toSeq == (0L until D).map(b => (2L, b, 0L)))
+    assert(got.count(_._1 == 1L) == D)
+  }
+
   test("dedup sweep is monotone and matches the detector's own pair counts") {
     val pairs = ExtQueries.minhashDedup(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong, r.getInt(3).toLong))
