@@ -138,9 +138,9 @@ object ExtQueries {
   // ---- bench-only harness memo --------------------------------------------
 
   /** Bench-only graded-list memo — the harness-attribution device of
-    * `tools/BENCH_PROTOCOL.md`: when [[graft.Bench]] sets the
-    * `graft.bench.memo` system property to a scratch directory, a graded
-    * rank list materializes to parquet there ONCE per JVM, and every later
+    * `tools/BENCH_PROTOCOL.md`: inside a [[graft.BenchMemo]] scope (opened
+    * by [[graft.Bench]]), a graded rank list materializes to parquet under
+    * the scope's scratch directory ONCE, and every later
     * consumer — within one harness key or across the four that compose the
     * same families ([[annRecall]], [[recallAtK]], [[rankMetrics]],
     * [[annCost]]; [[filterRecall]]/[[filterCost]] for the filtered
@@ -149,13 +149,12 @@ object ExtQueries {
     * harness key pays its own marginal work, not its constituents'
     * rebuild — harness bench cost then grows with the number of harness
     * keys, not (families × harnesses). Correctness runs (Verify, the test
-    * suites) never set the property, so the oracle composition discipline
-    * and every plan pin are untouched; the property is read per call, so
-    * even a bench JVM running without the property behaves exactly as
-    * before. */
+    * suites) never open a memo scope, so the oracle composition discipline
+    * and every plan pin are untouched; the scope is read per call, so code
+    * outside it behaves exactly as without the memo. */
   private def benchMemo(spark: SparkSession, dir: String, name: String)
       (df: => DataFrame): DataFrame =
-    sys.props.get("graft.bench.memo") match {
+    graft.BenchMemo.root match {
       case Some(root) =>
         // the sanitized name alone is non-injective (/data/sf0.1 and
         // /data_sf0.1 would collide); the md5 suffix keys the memo to the
@@ -186,10 +185,10 @@ object ExtQueries {
     * [[indexDeleteImpl]]), so in a bench JVM each materializes ONCE and
     * every harness key pays only its marginal work. The `lazy val` shares
     * one substrate build between the two memo writes when both are cold.
-    * Correctness runs never set the property — composition untouched. */
+    * Correctness runs never open a memo scope — composition untouched. */
   private def labelPropPartsMemo(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    if (sys.props.contains("graft.bench.memo")) {
+    if (graft.BenchMemo.root.isDefined) {
       // labels derive FROM the memoized adjacency: when knn_adjacency is
       // already warm (the common warmup order) a cold lp_labels costs only
       // the propagation rounds, never a second graph build
@@ -10091,9 +10090,9 @@ object ExtQueries {
     * the Catalyst-pathological composed chain (the [[louvainMerge]] lesson
     * — heap-exhausted analysis when the stacked sweep/condense plans are
     * left lazy). Round 18 (advisor): the decision reads the FRAME, not the
-    * global `graft.bench.memo` property — the pin is skipped only when the
-    * frame actually IS a bare file-scan relation, so an embedding JVM that
-    * happens to set the property can never silently lose the load-bearing
+    * global [[graft.BenchMemo]] scope — the pin is skipped only when the
+    * frame actually IS a bare file-scan relation, so a caller that happens
+    * to run inside a memo scope can never silently lose the load-bearing
     * checkpoint on an unmemoized lineage. */
   private def pinUnlessMemo(df: DataFrame): DataFrame = {
     val isFileScan = df.queryExecution.analyzed.isInstanceOf[

@@ -311,7 +311,141 @@ object Streaming {
       .select(col("d.doc_id").as("doc_id"), col("d.ts").as("ts"),
         col("s.score").as("score"), col("s.sts").as("scored_at"))
 
+  // ---- foreachBatch queries -----------------------------------------------
+
+  /** The one foreachBatch skeleton every `start*` query below runs
+    * through: append output, `ckpt` as the checkpoint (the exactly-once
+    * guard), and `Trigger.AvailableNow` (process what has landed, then
+    * stop — the scheduled-batch cadence without a long-lived cluster).
+    * `body` receives each micro-batch and its id. */
+  private def startBatches(in: DataFrame, ckpt: String)
+      (body: (DataFrame, Long) => Unit): StreamingQuery =
+    in.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch(body)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Drop a standing frame: unpersist it and free the blocks behind it if
+    * it was localCheckpointed (a swapped-in index generation; a no-op for
+    * a plainly persisted frame). */
+  private def retire(frame: Dataset[_]): Unit = {
+    frame.unpersist()
+    graft.operators.IterStorage.release(frame.toDF())
+  }
+
+  /** Retire `frames` when `query` terminates (success or failure), then
+    * deregister the listener — the cleanup contract for gates that build a
+    * standing cached index at stream start: repeated gate runs in a
+    * long-lived session hold exactly one live index each, never an
+    * accumulation. `frames` is by-name, so it releases whatever frames are
+    * standing AT termination (after a tombstone swap, the repaired ones).
+    *
+    * The listener can only be registered AFTER `start()` (it needs the
+    * query id), so a fast-terminating query — `AvailableNow` over an
+    * empty or already-consumed source finishes in milliseconds — may post
+    * its terminated event BEFORE registration. The post-registration
+    * `isActive` check closes that window: if the query already died, the
+    * cleanup runs inline; the atomic guard makes the
+    * check-then-event double-fire release exactly once. Returns `query`. */
+  private def releaseOnTermination(query: StreamingQuery,
+      frames: => Seq[Dataset[_]]): StreamingQuery = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val spark = query.sparkSession
+    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def release(): Unit =
+      if (released.compareAndSet(false, true)) frames.foreach(retire)
+    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) {
+          release()
+          spark.streams.removeListener(listener)
+        }
+    }
+    spark.streams.addListener(listener)
+    if (!query.isActive) {
+      release()
+      spark.streams.removeListener(listener)
+    }
+    query
+  }
+
+  /** The tombstone control path shared by the standing-index gates
+    * ([[startNearDupGate]], [[startMediaDupGate]], [[startKnnAttachGate]]).
+    * The `op` column is optional and read from the batch's schema:
+    *
+    *   - without it every row is an add, and `screen` gets the batch as
+    *     it came — no persist and no tombstone probe, so an add-only
+    *     stream pays nothing for the delete path;
+    *   - with it, the `key` ids of `"delete"` rows go to `drop` (which
+    *     removes them from the standing index) BEFORE `screen` gets the
+    *     `"add"` rows — the CDC convention, so one batch can retire a
+    *     corpus document and screen against its absence. Any other `op`
+    *     value, null included, fails the query with a message naming it
+    *     (raised inside the adds scan, so the check costs no job of its
+    *     own): a gate owes one verdict per incoming document, and a row
+    *     that is neither would otherwise vanish without one.
+    *
+    * `drop` runs only when the batch holds a tombstone; it should swap
+    * the standing frames EAGERLY ([[without]]) so later batches never
+    * re-derive lineage through dropped cache. */
+  private def splitOps(batch: DataFrame, key: String)(drop: DataFrame => Unit)
+      (screen: DataFrame => Unit): Unit =
+    if (!batch.columns.contains("op")) screen(batch)
+    else {
+      val b = batch.persist()
+      try {
+        val tomb = b.filter(col("op") === "delete").select(col(key))
+        if (!tomb.isEmpty) drop(tomb)
+        screen(b.filter(
+          when(col("op") === "delete", false)
+            .when(col("op") === "add", true)
+            .otherwise(raise_error(concat(lit("unknown op '"),
+              coalesce(col("op"), lit("null")),
+              lit("': gate stream rows must be \"add\" or \"delete\""))))))
+      } finally b.unpersist()
+    }
+
+  /** `frame` without the rows whose `key` is in `tomb`, eagerly
+    * localCheckpointed: the swap TRUNCATES lineage at the survivor frame,
+    * so a lost cached block after the batch commits can never recompute
+    * through the expired foreachBatch source or the retired previous
+    * index generation (persist + count would keep that lineage). */
+  private def without(frame: DataFrame, tomb: DataFrame, key: String): DataFrame =
+    frame.join(broadcast(tomb), Seq(key), "left_anti").localCheckpoint(true)
+
   // ---- change capture -----------------------------------------------------
+
+  /** The published `v=<id>` versions under `dir`, ascending — the one
+    * listing rule of the versioned-state exactly-once device
+    * ([[startChangeCapture]], [[startMergeApply]], [[startFeedApply]],
+    * [[startFeedApplyMinmax]]). Listed through the Hadoop FileSystem API,
+    * so versioned directories work on any supported filesystem
+    * (HDFS/S3A/local), not only `java.io` paths. Empty when the directory
+    * does not exist yet. */
+  private def versions(spark: SparkSession, dir: String): Seq[Long] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Nil
+    else fs.listStatus(path).toSeq
+      .map(_.getPath.getName)
+      .filter(_.startsWith("v="))
+      .flatMap(_.stripPrefix("v=").toLongOption)
+      .sorted
+  }
+
+  /** Highest published version strictly below `beforeId` under `dir` —
+    * the predecessor a batch, or its replay, reads. None when no prior
+    * version exists: the first batch's empty-base case. */
+  private def latestVersionBefore(spark: SparkSession, dir: String,
+      beforeId: Long): Option[Long] =
+    versions(spark, dir).filter(_ < beforeId).maxOption
 
   /** Streaming change capture — the continuous form of
     * [[graft.queries.ExtQueries.snapshotDiff]], for the crawl pipeline
@@ -339,53 +473,28 @@ object Streaming {
     * document text never reaches the join. `emit` receives the changelog
     * frame and must materialize it (write/collect) before returning, the
     * standard foreachBatch contract. */
-  /** Highest published `v=<id>` snapshot version strictly below `beforeId`
-    * under `dir` — shared by [[startChangeCapture]] and [[startMergeApply]]
-    * (one discovery rule for the versioned-snapshot exactly-once device).
-    * Listed through the Hadoop FileSystem API, so versioned snapshot
-    * directories work on any supported filesystem (HDFS/S3A/local), not
-    * only `java.io` paths. None when the directory does not exist yet or
-    * holds no prior version — the first batch's empty-base case. */
-  private def latestVersionBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, beforeId: Long): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .flatMap(_.stripPrefix("v=").toLongOption)
-      .filter(_ < beforeId)
-      .maxOption
-  }
-
   def startChangeCapture(snapshots: DataFrame, fingerprintDir: String,
       ckpt: String)(emit: DataFrame => Unit): StreamingQuery =
-    snapshots.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // consumed by the diff AND the fingerprint publish — persist so the
-        // snapshot hashes once, not once per consumer
-        val cur = batch
-          .select(col("doc_id"),
-            graft.functions.GraftFunctions.hash64(col("text")).as("h_cur"))
-          .persist()
-        try {
-          val prevVersion = latestVersionBefore(spark, fingerprintDir, batchId)
-          val prev = prevVersion match {
-            case Some(v) => spark.read.parquet(s"$fingerprintDir/v=$v")
-              .select(col("doc_id"), col("h").as("h_prev"))
-            case None => cur.select(col("doc_id"), col("h_cur").as("h_prev")).limit(0)
-          }
-          emit(graft.queries.ExtQueries.fingerprintDiff(cur, prev))
-          cur.select(col("doc_id"), col("h_cur").as("h"))
-            .write.mode("overwrite").parquet(s"$fingerprintDir/v=$batchId")
-        } finally cur.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(snapshots, ckpt) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // consumed by the diff AND the fingerprint publish — persist so the
+      // snapshot hashes once, not once per consumer
+      val cur = batch
+        .select(col("doc_id"),
+          graft.functions.GraftFunctions.hash64(col("text")).as("h_cur"))
+        .persist()
+      try {
+        val prevVersion = latestVersionBefore(spark, fingerprintDir, batchId)
+        val prev = prevVersion match {
+          case Some(v) => spark.read.parquet(s"$fingerprintDir/v=$v")
+            .select(col("doc_id"), col("h").as("h_prev"))
+          case None => cur.select(col("doc_id"), col("h_cur").as("h_prev")).limit(0)
+        }
+        emit(graft.queries.ExtQueries.fingerprintDiff(cur, prev))
+        cur.select(col("doc_id"), col("h_cur").as("h"))
+          .write.mode("overwrite").parquet(s"$fingerprintDir/v=$batchId")
+      } finally cur.unpersist()
+    }
 
   /** Streaming CDC MERGE-APPLY — the continuous form of
     * [[graft.queries.ExtQueries.mergeApply]] and the APPLY half of the
@@ -424,37 +533,26 @@ object Streaming {
       retainLast: Int = Int.MaxValue)(emit: DataFrame => Unit): StreamingQuery = {
     require(retainLast >= 2,
       s"retainLast must keep the current AND predecessor versions, got $retainLast")
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val dataCols = Seq("doc_id", "text", "lang", "source", "n_chars")
-        val prevVersion = latestVersionBefore(spark, snapshotDir, batchId)
-        val prev = prevVersion match {
-          case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
-          case None => batch.select(dataCols.map(col): _*).limit(0)
-        }
-        val rows = prev
-          .select(lit(0).as("src") +: lit("B").as("op") +: dataCols.map(col): _*)
-          .unionByName(batch.select(lit(1).as("src") +: col("op") +: dataCols.map(col): _*))
-        graft.queries.ExtQueries.mergeWinners(rows)
-          .write.mode("overwrite").parquet(s"$snapshotDir/v=$batchId")
-        emit(spark.read.parquet(s"$snapshotDir/v=$batchId"))
-        if (retainLast != Int.MaxValue) {
-          val path = new org.apache.hadoop.fs.Path(snapshotDir)
-          val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.listStatus(path).toSeq
-            .map(_.getPath.getName)
-            .filter(_.startsWith("v="))
-            .flatMap(_.stripPrefix("v=").toLongOption)
-            .sorted.dropRight(retainLast)
-            .foreach(v =>
-              fs.delete(new org.apache.hadoop.fs.Path(s"$snapshotDir/v=$v"), true))
-        }
+    startBatches(changes, ckpt) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val dataCols = Seq("doc_id", "text", "lang", "source", "n_chars")
+      val prevVersion = latestVersionBefore(spark, snapshotDir, batchId)
+      val prev = prevVersion match {
+        case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
+        case None => batch.select(dataCols.map(col): _*).limit(0)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      val rows = prev
+        .select(lit(0).as("src") +: lit("B").as("op") +: dataCols.map(col): _*)
+        .unionByName(batch.select(lit(1).as("src") +: col("op") +: dataCols.map(col): _*))
+      graft.queries.ExtQueries.mergeWinners(rows)
+        .write.mode("overwrite").parquet(s"$snapshotDir/v=$batchId")
+      emit(spark.read.parquet(s"$snapshotDir/v=$batchId"))
+      if (retainLast != Int.MaxValue)
+        versions(spark, snapshotDir).dropRight(retainLast).foreach { v =>
+          val old = new org.apache.hadoop.fs.Path(s"$snapshotDir/v=$v")
+          old.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(old, true)
+        }
+    }
   }
 
   /** Streaming MATERIALIZED-VIEW maintenance — the continuous form of
@@ -490,35 +588,30 @@ object Streaming {
     * I/O is |groups| rows regardless of feed volume. */
   def startFeedApply(feed: DataFrame, init: DataFrame, stateDir: String,
       ckpt: String)(emit: DataFrame => Unit): StreamingQuery =
-    feed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val deltas = batch.select(col("lang"), col("source"),
-            graft.queries.ExtQueries.feedSign.as("sgn"), col("n_chars"))
-          .groupBy(col("lang"), col("source"))
-          .agg(sum(col("sgn")).as("d_docs"),
-            sum(col("sgn") * col("n_chars")).as("d_chars"))
-        val prev = latestVersionBefore(spark, stateDir, batchId) match {
-          case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
-          case None => init.select(col("lang"), col("source"),
-            col("n_docs"), col("sum_chars"))
-        }
-        prev.join(deltas, Seq("lang", "source"), "full_outer")
-          .select(col("lang"), col("source"),
-            (coalesce(col("n_docs"), lit(0L))
-              + coalesce(col("d_docs"), lit(0L))).as("n_docs"),
-            (coalesce(col("sum_chars"), lit(0L))
-              + coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
-          .filter(col("n_docs") > 0)
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        emit(spark.read.parquet(s"$stateDir/v=$batchId")
-          .withColumn("avg_chars",
-            col("sum_chars").cast("double") / col("n_docs").cast("double")))
+    startBatches(feed, ckpt) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val deltas = batch.select(col("lang"), col("source"),
+          graft.queries.ExtQueries.feedSign.as("sgn"), col("n_chars"))
+        .groupBy(col("lang"), col("source"))
+        .agg(sum(col("sgn")).as("d_docs"),
+          sum(col("sgn") * col("n_chars")).as("d_chars"))
+      val prev = latestVersionBefore(spark, stateDir, batchId) match {
+        case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
+        case None => init.select(col("lang"), col("source"),
+          col("n_docs"), col("sum_chars"))
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      prev.join(deltas, Seq("lang", "source"), "full_outer")
+        .select(col("lang"), col("source"),
+          (coalesce(col("n_docs"), lit(0L))
+            + coalesce(col("d_docs"), lit(0L))).as("n_docs"),
+          (coalesce(col("sum_chars"), lit(0L))
+            + coalesce(col("d_chars"), lit(0L))).as("sum_chars"))
+        .filter(col("n_docs") > 0)
+        .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
+      emit(spark.read.parquet(s"$stateDir/v=$batchId")
+        .withColumn("avg_chars",
+          col("sum_chars").cast("double") / col("n_docs").cast("double")))
+    }
 
   /** Streaming RETRACTABLE-EXTREMUM maintenance — the lazy max/min twin
     * of [[startFeedApply]] and the continuous form of the batch
@@ -547,52 +640,47 @@ object Streaming {
   def startFeedApplyMinmax(feed: DataFrame, initTable: DataFrame,
       initAgg: DataFrame, stateDir: String, ckpt: String)
       (emit: DataFrame => Unit): StreamingQuery =
-    feed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.queries.ExtQueries
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          val prevT = latestVersionBefore(spark, s"$stateDir/table", batchId) match {
-            case Some(v) => spark.read.parquet(s"$stateDir/table/v=$v")
-            case None => initTable.select(col("doc_id"), col("lang"),
-              col("source"), col("n_chars"))
-          }
-          val prevA = latestVersionBefore(spark, s"$stateDir/agg", batchId) match {
-            case Some(v) => spark.read.parquet(s"$stateDir/agg/v=$v")
-            case None => initAgg.select(col("lang"), col("source"),
-              col("n_docs"), col("max_chars"), col("min_chars"))
-          }
-          // table maintenance: retractions remove, images upsert (the
-          // upsert anti-join makes a replayed postimage idempotent)
-          val removes = b
-            .filter(col("change_type").isin("delete", "update_preimage"))
-            .select(col("doc_id"))
-          val upserts = b
-            .filter(col("change_type").isin("insert", "update_postimage"))
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-          prevT.join(removes, Seq("doc_id"), "left_anti")
-            .join(upserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .unionByName(upserts)
-            .write.mode("overwrite").parquet(s"$stateDir/table/v=$batchId")
-          val tbl = spark.read.parquet(s"$stateDir/table/v=$batchId")
-          val aggs = ExtQueries.minmaxDeltaAggs
-          val deltas = b.groupBy(col("lang"), col("source"))
-            .agg(aggs.head, aggs.tail: _*)
-          ExtQueries.minmaxFold(prevA, deltas, tbl)
-            .write.mode("overwrite").parquet(s"$stateDir/agg/v=$batchId")
-          emit(spark.read.parquet(s"$stateDir/agg/v=$batchId"))
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(feed, ckpt) { (batch, batchId) =>
+      import graft.queries.ExtQueries
+      val spark = batch.sparkSession
+      val b = batch.persist()
+      try {
+        val prevT = latestVersionBefore(spark, s"$stateDir/table", batchId) match {
+          case Some(v) => spark.read.parquet(s"$stateDir/table/v=$v")
+          case None => initTable.select(col("doc_id"), col("lang"),
+            col("source"), col("n_chars"))
+        }
+        val prevA = latestVersionBefore(spark, s"$stateDir/agg", batchId) match {
+          case Some(v) => spark.read.parquet(s"$stateDir/agg/v=$v")
+          case None => initAgg.select(col("lang"), col("source"),
+            col("n_docs"), col("max_chars"), col("min_chars"))
+        }
+        // table maintenance: retractions remove, images upsert (the
+        // upsert anti-join makes a replayed postimage idempotent)
+        val removes = b
+          .filter(col("change_type").isin("delete", "update_preimage"))
+          .select(col("doc_id"))
+        val upserts = b
+          .filter(col("change_type").isin("insert", "update_postimage"))
+          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+        prevT.join(removes, Seq("doc_id"), "left_anti")
+          .join(upserts.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .unionByName(upserts)
+          .write.mode("overwrite").parquet(s"$stateDir/table/v=$batchId")
+        val tbl = spark.read.parquet(s"$stateDir/table/v=$batchId")
+        val aggs = ExtQueries.minmaxDeltaAggs
+        val deltas = b.groupBy(col("lang"), col("source"))
+          .agg(aggs.head, aggs.tail: _*)
+        ExtQueries.minmaxFold(prevA, deltas, tbl)
+          .write.mode("overwrite").parquet(s"$stateDir/agg/v=$batchId")
+        emit(spark.read.parquet(s"$stateDir/agg/v=$batchId"))
+      } finally b.unpersist()
+    }
 
   /** Streaming MEDIA near-duplicate gate — the perceptual-hash twin of
     * [[startNearDupGate]] and the continuous form of
     * [[graft.queries.ExtQueries.mediaDedup]]: each micro-batch of incoming
-    * media payloads is screened against a STATIC corpus signature index
+    * media payloads is screened against a STANDING corpus signature index
     * (perceptual band keys, built ONCE at stream start and persisted),
     * emitting one verdict row per incoming document —
     * `(doc_id, is_media_dup, match_id, hamming)`, match_id the smallest
@@ -602,6 +690,16 @@ object Streaming {
     * ([[graft.queries.ExtQueries.phashSignatures]] → `phashBands` →
     * `phashPairs`) — one definition, so the continuous and batch media
     * screens cannot drift (parity spec-pinned).
+    *
+    * Tombstones: the `op` column is optional. Without it every row is
+    * screened. With it, `"add"` rows are screened and `"delete"` rows
+    * remove their doc_ids from the standing signature index mid-stream
+    * (the perceptual index keeps no derived per-node state, so the
+    * anti-join IS the whole repair, and the band projection re-derives
+    * from the swapped signature frame); deletes apply before the same
+    * batch's adds, and any other `op` value fails the query
+    * ([[splitOps]]). Parity vs restart-with-survivors and a live "deleted
+    * media stops matching" case are spec-pinned.
     *
     * At scale: the corpus index is FOUR LONGS per document (the cheapest
     * standing index in the repo — minhash keeps whole shingle sets for its
@@ -613,17 +711,20 @@ object Streaming {
   def startMediaDupGate(docs: DataFrame, corpus: DataFrame, ckpt: String)
       (emit: DataFrame => Unit): StreamingQuery = {
     import graft.queries.ExtQueries
-    val corpusSigs = ExtQueries
+    var corpusSigs = ExtQueries
       .phashSignatures(corpus.select(col("doc_id"), col("text")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusBands = ExtQueries.phashBands(corpusSigs)
-    val query = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    var corpusBands = ExtQueries.phashBands(corpusSigs)
+    releaseOnTermination(startBatches(docs, ckpt) { (batch, _) =>
+      splitOps(batch, "doc_id") { tomb =>
+        val newSigs = without(corpusSigs, tomb, "doc_id")
+        retire(corpusSigs)
+        corpusSigs = newSigs
+        corpusBands = ExtQueries.phashBands(newSigs)
+      } { adds =>
         // persisted: probed by the gate join AND the verdict assembly
         val bSigs = ExtQueries.phashSignatures(
-          batch.select(col("doc_id"), col("text"))).persist()
+          adds.select(col("doc_id"), col("text"))).persist()
         try {
           val matches = ExtQueries
             .phashPairs(corpusBands, ExtQueries.phashBands(bSigs), lit(true))
@@ -639,80 +740,35 @@ object Streaming {
               col("m.hamming").as("hamming")))
         } finally bSigs.unpersist()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    releaseOnTermination(docs.sparkSession, query, Seq(corpusSigs))
-    query
-  }
-
-  /** Delete-aware [[startMediaDupGate]] — the tombstone control path for
-    * the MEDIA signature index, per the [[startNearDupGateWithDeletes]]
-    * discipline: `"add"` rows screen as in the static gate; `"delete"`
-    * rows remove corpus doc_ids from the standing signature index
-    * mid-stream (the perceptual index keeps no derived per-node state —
-    * the anti-join IS the whole repair, and the band projection re-derives
-    * from the swapped signature frame). Deletes apply before the same
-    * batch's adds (the CDC convention); the swap is an eager
-    * localCheckpoint, truncating the standing index's lineage at the
-    * boundary. Parity vs restart-with-survivors and a live
-    * "deleted media stops matching" case are spec-pinned. */
-  def startMediaDupGateWithDeletes(docs: DataFrame, corpus: DataFrame,
-      ckpt: String)(emit: DataFrame => Unit): StreamingQuery = {
-    import graft.queries.ExtQueries
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var corpusSigs = ExtQueries
-      .phashSignatures(corpus.select(col("doc_id"), col("text"))).persist(sl)
-    var corpusBands = ExtQueries.phashBands(corpusSigs)
-    val query = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          val tomb = b.filter(col("op") === "delete").select(col("doc_id"))
-          if (!tomb.isEmpty) {
-            val newSigs = corpusSigs.join(broadcast(tomb), Seq("doc_id"),
-              "left_anti").localCheckpoint(true)
-            corpusSigs.unpersist(); graft.operators.IterStorage.release(corpusSigs)
-            corpusSigs = newSigs
-            corpusBands = ExtQueries.phashBands(newSigs)
-          }
-          val adds = b.filter(col("op") === "add")
-            .select(col("doc_id"), col("text"))
-          val bSigs = ExtQueries.phashSignatures(adds).persist()
-          try {
-            val matches = ExtQueries
-              .phashPairs(corpusBands, ExtQueries.phashBands(bSigs), lit(true))
-              .groupBy(col("doc_b").as("doc_id"))
-              .agg(min(struct(col("doc_a"), col("hamming"))).as("m"))
-            emit(bSigs.select(col("doc_id"))
-              .join(matches, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                col("m").isNotNull.as("is_media_dup"),
-                col("m.doc_a").as("match_id"),
-                col("m.hamming").as("hamming")))
-          } finally bSigs.unpersist()
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    releaseOnTermination(docs.sparkSession, query, Seq(corpusSigs))
-    query
+    }, Seq(corpusSigs))
   }
 
   /** Streaming NEAR-duplicate gate — the continuous form of
     * [[graft.queries.ExtQueries.crossDedup]], and the near-miss upgrade of
     * [[dedupStream]]'s exact-fingerprint screen: every micro-batch of
-    * incoming documents is checked against a STATIC corpus index (minhash
-    * band keys + shingle sets, built ONCE at stream start and persisted
-    * across batches), emitting one verdict row per incoming document —
-    * `(doc_id, is_near_dup, match_id)`, match_id the smallest corpus id
-    * whose exact-verified Jaccard clears 0.5.
+    * incoming documents is checked against a STANDING corpus index
+    * (minhash band keys + shingle sets, built ONCE at stream start and
+    * persisted across batches), emitting one verdict row per incoming
+    * document — `(doc_id, is_near_dup, match_id)`, match_id the smallest
+    * corpus id whose exact-verified Jaccard clears 0.5.
     *
     * The candidate+verify dataflow IS the batch operator's
     * [[graft.queries.ExtQueries.crossNearDupPairs]] core — one definition,
     * so the continuous and batch incremental-dedup paths cannot drift
     * (spec-pinned against [[graft.queries.ExtQueries.crossDedup]] anyway).
+    *
+    * Tombstones close the streaming half of the GDPR cascade
+    * (`e_delete_apply` / `e_index_delete` are the batch half). The `op`
+    * column is optional. Without it every row is screened. With it,
+    * `"add"` rows are screened and `"delete"` rows remove their doc_ids
+    * from the standing index mid-stream (shingle and band rows anti-joined
+    * out — the index keeps no derived per-node state, so the anti-join IS
+    * the whole repair), without the restart-with-survivors a static index
+    * forces; deletes apply before the same batch's adds, and any other
+    * `op` value fails the query ([[splitOps]]). A tombstone costs one
+    * eager anti-join of the standing frames, paid once per control batch.
+    * Parity is spec-pinned: after a tombstone batch, verdicts equal a
+    * fresh gate started over the survivor corpus.
     *
     * At scale this is precisely the "static bucketed index" story the batch
     * operator's scaladoc promises: the corpus side shingles/bands/persists
@@ -725,14 +781,18 @@ object Streaming {
   def startNearDupGate(docs: DataFrame, corpus: DataFrame, ckpt: String)
       (emit: DataFrame => Unit): StreamingQuery = {
     import graft.queries.ExtQueries
-    val corpusShd = ExtQueries.shingleSets(corpus.select(col("doc_id"), col("text")))
+    var corpusShd = ExtQueries.shingleSets(corpus.select(col("doc_id"), col("text")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusBands = ExtQueries.minhashBands(corpusShd)
-    val query = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bShd = ExtQueries.shingleSets(batch.select(col("doc_id"), col("text")))
+    // persisted inside minhashBands (persist = true default)
+    var corpusBands = ExtQueries.minhashBands(corpusShd)
+    releaseOnTermination(startBatches(docs, ckpt) { (batch, _) =>
+      splitOps(batch, "doc_id") { tomb =>
+        val newShd = without(corpusShd, tomb, "doc_id")
+        val newBands = without(corpusBands, tomb, "doc_id")
+        retire(corpusShd); retire(corpusBands)
+        corpusShd = newShd; corpusBands = newBands
+      } { adds =>
+        val bShd = ExtQueries.shingleSets(adds.select(col("doc_id"), col("text")))
           .persist()
         try {
           val bBands = ExtQueries.minhashBands(bShd, persist = false)
@@ -740,88 +800,13 @@ object Streaming {
             .crossNearDupPairs(corpusBands, corpusShd, bBands, bShd)
             .groupBy(col("doc_b").as("doc_id"))
             .agg(min(col("doc_a")).as("match_id"))
-          emit(batch.select(col("doc_id"))
+          emit(adds.select(col("doc_id"))
             .join(matches, Seq("doc_id"), "left")
             .select(col("doc_id"),
               col("match_id").isNotNull.as("is_near_dup"), col("match_id")))
         } finally bShd.unpersist()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // corpusBands is persisted inside minhashBands (persist = true default)
-    releaseOnTermination(docs.sparkSession, query, Seq(corpusShd, corpusBands))
-    query
-  }
-
-  /** Delete-aware [[startNearDupGate]] — the TOMBSTONE control path that
-    * closes the streaming half of the GDPR cascade (`e_delete_apply` /
-    * `e_index_delete` are the batch half): the stream's rows carry an
-    * `op` column — `"add"` rows are screened exactly as in
-    * [[startNearDupGate]]; `"delete"` rows are tombstones whose doc_ids
-    * are REMOVED from the standing index mid-stream (shingle and band
-    * rows anti-joined out — the dedup index keeps no derived per-node
-    * state, so the anti-join IS the whole repair), without the
-    * restart-with-survivors a static gate forces. Deletes apply BEFORE
-    * the same batch's adds (the CDC convention), so a batch can retire a
-    * corpus document and screen against its absence in one trigger.
-    *
-    * The index swap is EAGER (new frames materialize before the old ones
-    * release — the IterStorage discipline), so a tombstone's cost is one
-    * anti-join of the standing frames, paid once per control batch, and
-    * later batches never re-derive lineage through dropped cache.
-    *
-    * Parity is spec-pinned: after a tombstone batch, verdicts equal a
-    * fresh gate started over the survivor corpus. */
-  def startNearDupGateWithDeletes(docs: DataFrame, corpus: DataFrame,
-      ckpt: String)(emit: DataFrame => Unit): StreamingQuery = {
-    import graft.queries.ExtQueries
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var corpusShd = ExtQueries
-      .shingleSets(corpus.select(col("doc_id"), col("text"))).persist(sl)
-    var corpusBands = ExtQueries.minhashBands(corpusShd)
-    val query = docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          val tomb = b.filter(col("op") === "delete").select(col("doc_id"))
-          if (!tomb.isEmpty) {
-            // eager localCheckpoint (the IterStorage discipline): the swap
-            // TRUNCATES lineage at the survivor frames, so a lost cached
-            // block after the batch commits can never recompute through
-            // the expired foreachBatch source or the unpersisted previous
-            // index generation (persist+count would leave that lineage)
-            val newShd = corpusShd.join(broadcast(tomb), Seq("doc_id"),
-              "left_anti").localCheckpoint(true)
-            val newBands = corpusBands.join(broadcast(tomb), Seq("doc_id"),
-              "left_anti").localCheckpoint(true)
-            corpusShd.unpersist(); graft.operators.IterStorage.release(corpusShd)
-            corpusBands.unpersist(); graft.operators.IterStorage.release(corpusBands)
-            corpusShd = newShd; corpusBands = newBands
-          }
-          val adds = b.filter(col("op") === "add")
-            .select(col("doc_id"), col("text"))
-          val bShd = ExtQueries.shingleSets(adds).persist()
-          try {
-            val bBands = ExtQueries.minhashBands(bShd, persist = false)
-            val matches = ExtQueries
-              .crossNearDupPairs(corpusBands, corpusShd, bBands, bShd)
-              .groupBy(col("doc_b").as("doc_id"))
-              .agg(min(col("doc_a")).as("match_id"))
-            emit(adds.select(col("doc_id"))
-              .join(matches, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                col("match_id").isNotNull.as("is_near_dup"), col("match_id")))
-          } finally bShd.unpersist()
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // by-name: releases whatever frames are standing AT termination,
-    // which after a tombstone swap are the repaired ones
-    releaseOnTermination(docs.sparkSession, query, Seq(corpusShd, corpusBands))
-    query
+    }, Seq(corpusShd, corpusBands))
   }
 
   /** Streaming FILTERED vector serving — the continuous form of
@@ -855,26 +840,13 @@ object Streaming {
     val (assigned, cents) = ExtQueries.ivfLabeledIndex(corpus)
     val idx = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centTable = cents.persist()
-    val query = queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        emit(ExtQueries.ivfFilterServe(idx,
-          ExtQueries.ivfFilterProbes(
-            batch.select(col("vec_id"), col("embedding"), col("label")),
-            centTable)))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // Gates that build a standing cached index own its release: when THIS
-    // query terminates, drop the index and centroid table and deregister —
-    // repeated gate runs in a long-lived session then hold exactly one live
-    // index each, never an accumulation.
-    releaseOnTermination(queries.sparkSession, query,
-      Seq(idx, centTable))
-    query
+    releaseOnTermination(startBatches(queries, ckpt) { (batch, _) =>
+      emit(ExtQueries.ivfFilterServe(idx,
+        ExtQueries.ivfFilterProbes(
+          batch.select(col("vec_id"), col("embedding"), col("label")),
+          centTable)))
+    }, Seq(idx, centTable))
   }
-
   /** Delete-aware ADAPTIVE filtered vector serving — the tombstone
     * control path for the richest standing index in the streaming layer,
     * and the production upgrade of [[startFilteredVectorGate]]'s fixed
@@ -918,86 +890,36 @@ object Streaming {
     val centTable = cents0.persist()
     var idx = assignedRaw.persist(sl)
     var counts = ExtQueries.ivfCellCounts(idx).persist(sl)
-    val query = queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          val tomb = b.filter(col("op") === "delete").select(col("vec_id"))
-          if (!tomb.isEmpty) {
-            // decrement from the deleted rows' OWN assignment — the
-            // incremental fold, certified against a recount by the spec
-            val dec = idx.join(broadcast(tomb), Seq("vec_id"), "left_semi")
-              .groupBy(col("cell"), col("label"))
-              .agg(count(lit(1)).as("d"))
-            val newIdx = idx.join(broadcast(tomb), Seq("vec_id"),
-              "left_anti").localCheckpoint(true)
-            val newCounts = counts.join(broadcast(dec), Seq("cell", "label"),
-                "left")
-              .select(col("cell"), col("label"),
-                (col("m") - coalesce(col("d"), lit(0L))).as("m"))
-              .filter(col("m") > 0)
-              .localCheckpoint(true)
-            idx.unpersist(); graft.operators.IterStorage.release(idx)
-            counts.unpersist(); graft.operators.IterStorage.release(counts)
-            idx = newIdx; counts = newCounts
-          }
-          val q = b.filter(col("op") === "query")
-            .select(col("vec_id"), col("embedding"), col("label"))
-          val qcum = ExtQueries.ivfProbeScheduleFrom(counts, centTable, q)
-          val qplan = ExtQueries.ivfAdaptivePlanOf(qcum, targetK, spillMax)
-          val probe = qcum.join(broadcast(qplan), Seq("qid"))
-            .filter(col("crank") <= col("eff_nprobe"))
-            .select(col("qid"), col("qe"), col("nq"), col("tgt"), col("cell"))
-          emit(ExtQueries.ivfFilterServe(idx, probe))
-        } finally b.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    releaseOnTermination(queries.sparkSession, query,
-      Seq(idx, counts, centTable))
-    query
-  }
-
-  /** Unpersist `frames` when `query` terminates (success or failure), then
-    * deregister the listener — the cleanup contract for gates that build a
-    * standing cached index at stream start.
-    *
-    * The listener can only be registered AFTER `start()` (it needs the
-    * query id), so a fast-terminating query — `AvailableNow` over an
-    * empty or already-consumed source finishes in milliseconds — may post
-    * its terminated event BEFORE registration. The post-registration
-    * `isActive` check closes that window: if the query already died, the
-    * cleanup runs inline; the atomic guard makes the
-    * check-then-event double-fire release exactly once. */
-  private def releaseOnTermination(spark: SparkSession, query: StreamingQuery,
-      frames: => Seq[Dataset[_]]): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // IterStorage.release frees the blocks behind a localCheckpointed
-    // frame (the delete gates swap generations in) — no-op otherwise
-    def release(): Unit =
-      if (released.compareAndSet(false, true)) frames.foreach { f =>
-        f.unpersist(); graft.operators.IterStorage.release(f.toDF())
-      }
-    lazy val listener: StreamingQueryListener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) {
-          release()
-          spark.streams.removeListener(listener)
+    releaseOnTermination(startBatches(queries, ckpt) { (batch, _) =>
+      val b = batch.persist()
+      try {
+        val tomb = b.filter(col("op") === "delete").select(col("vec_id"))
+        if (!tomb.isEmpty) {
+          // decrement from the deleted rows' OWN assignment — the
+          // incremental fold, certified against a recount by the spec
+          val dec = idx.join(broadcast(tomb), Seq("vec_id"), "left_semi")
+            .groupBy(col("cell"), col("label"))
+            .agg(count(lit(1)).as("d"))
+          val newIdx = without(idx, tomb, "vec_id")
+          val newCounts = counts.join(broadcast(dec), Seq("cell", "label"),
+              "left")
+            .select(col("cell"), col("label"),
+              (col("m") - coalesce(col("d"), lit(0L))).as("m"))
+            .filter(col("m") > 0)
+            .localCheckpoint(true)
+          retire(idx); retire(counts)
+          idx = newIdx; counts = newCounts
         }
-    }
-    spark.streams.addListener(listener)
-    if (!query.isActive) {
-      release()
-      spark.streams.removeListener(listener)
-    }
+        val q = b.filter(col("op") === "query")
+          .select(col("vec_id"), col("embedding"), col("label"))
+        val qcum = ExtQueries.ivfProbeScheduleFrom(counts, centTable, q)
+        val qplan = ExtQueries.ivfAdaptivePlanOf(qcum, targetK, spillMax)
+        val probe = qcum.join(broadcast(qplan), Seq("qid"))
+          .filter(col("crank") <= col("eff_nprobe"))
+          .select(col("qid"), col("qe"), col("nq"), col("tgt"), col("cell"))
+        emit(ExtQueries.ivfFilterServe(idx, probe))
+      } finally b.unpersist()
+    }, Seq(idx, counts, centTable))
   }
 
   /** Streaming incremental-kNN ATTACH gate — the continuous form of
@@ -1017,6 +939,21 @@ object Streaming {
     * continuous and daily attach paths cannot drift (parity is spec-pinned
     * against the shared core across ≥2 micro-batches anyway).
     *
+    * Tombstones: the `op` column is optional. Without it every row
+    * attaches. With it, `"add"` rows attach and `"delete"` rows tombstone
+    * `vec_id`s out of the standing assignment and adjacency; deletes apply
+    * before the same batch's adds, and any other `op` value fails the
+    * query ([[splitOps]]). Deletion here is not a plain anti-join: a node
+    * whose top-k contained a deleted neighbor must be RESCORED against
+    * survivors (the deletion can promote a node from outside the old
+    * top-k). The repair body is the graded `e_index_delete` key's own
+    * [[graft.queries.ExtQueries.knnRepairEdges]] — one definition, so the
+    * batch GDPR cascade and the mid-stream delete path cannot drift; that
+    * key's oracle certifies repair ≡ rebuild-over-survivors, which is
+    * exactly the parity the gate's spec re-pins end to end. Repair cost
+    * is |touched|·|cell| rescored pairs per control batch, never a corpus
+    * rebuild and never a stream restart.
+    *
     * At scale: the standing index is |corpus| slim assigned rows plus the
     * |corpus|·k adjacency — persisted once, never reshuffled; each
     * micro-batch contributes |batch|·|cell| scored pairs (proportional to
@@ -1032,84 +969,26 @@ object Streaming {
   def startKnnAttachGate(batches: DataFrame, corpus: DataFrame, ckpt: String)
       (emit: DataFrame => Unit): StreamingQuery = {
     import graft.queries.ExtQueries
-    val cents = ExtQueries.seedCentroidsOf(corpus).persist()
-    val corpusAssigned = ExtQueries.knnAssign(corpus, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val standing = ExtQueries.knnAdjacency(corpusAssigned)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val query = batches.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persisted: both the batch-node scoring and the touched-cell
-        // screen consume the assignment; released when the batch commits
-        val batchAssigned = ExtQueries.knnAssign(
-          batch.select(col("vec_id"), col("embedding")), cents).persist()
-        try emit(ExtQueries.knnAttach(corpusAssigned, standing, batchAssigned))
-        finally batchAssigned.unpersist()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    releaseOnTermination(batches.sparkSession, query,
-      Seq(cents, corpusAssigned, standing))
-    query
-  }
-
-  /** Delete-aware [[startKnnAttachGate]] — the tombstone control path for
-    * the STANDING ADJACENCY, where deletion is not a plain anti-join: a
-    * node whose top-k contained a deleted neighbor must be RESCORED
-    * against survivors (the deletion can promote a node from outside the
-    * old top-k). The repair body is the graded `e_index_delete` key's own
-    * [[graft.queries.ExtQueries.knnRepairEdges]] — one definition, so the
-    * batch GDPR cascade and the mid-stream delete path cannot drift; that
-    * key's oracle certifies repair ≡ rebuild-over-survivors, which is
-    * exactly the parity this gate's spec re-pins end to end.
-    *
-    * Stream rows carry `op` — `"add"` rows attach as in
-    * [[startKnnAttachGate]]; `"delete"` rows tombstone `vec_id`s out of
-    * the standing assignment and adjacency (deletes before adds within a
-    * batch, the CDC convention). The swap is eager ([[IterStorage]]
-    * discipline): repair cost is |touched|·|cell| rescored pairs per
-    * control batch, never a corpus rebuild and never a stream restart. */
-  def startKnnAttachGateWithDeletes(batches: DataFrame, corpus: DataFrame,
-      ckpt: String)(emit: DataFrame => Unit): StreamingQuery = {
-    import graft.queries.ExtQueries
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val cents = ExtQueries.seedCentroidsOf(corpus).persist()
     var corpusAssigned = ExtQueries.knnAssign(corpus, cents).persist(sl)
     var standing = ExtQueries.knnAdjacency(corpusAssigned).persist(sl)
-    val query = batches.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          val tomb = b.filter(col("op") === "delete")
-            .select(col("vec_id").as("del_id"))
-          if (!tomb.isEmpty) {
-            // eager localCheckpoint swap — see startNearDupGateWithDeletes
-            val newAssigned = corpusAssigned.join(broadcast(tomb),
-              corpusAssigned("vec_id") === tomb("del_id"), "left_anti")
-              .localCheckpoint(true)
-            val newStanding = ExtQueries
-              .knnRepairEdges(newAssigned, standing, tomb).localCheckpoint(true)
-            corpusAssigned.unpersist()
-            graft.operators.IterStorage.release(corpusAssigned)
-            standing.unpersist(); graft.operators.IterStorage.release(standing)
-            corpusAssigned = newAssigned; standing = newStanding
-          }
-          val adds = b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding"))
-          val batchAssigned = ExtQueries.knnAssign(adds, cents).persist()
-          try emit(ExtQueries.knnAttach(corpusAssigned, standing, batchAssigned))
-          finally batchAssigned.unpersist()
-        } finally b.unpersist()
+    releaseOnTermination(startBatches(batches, ckpt) { (batch, _) =>
+      splitOps(batch, "vec_id") { tomb =>
+        val newAssigned = without(corpusAssigned, tomb, "vec_id")
+        val newStanding = ExtQueries.knnRepairEdges(newAssigned, standing,
+          tomb.select(col("vec_id").as("del_id"))).localCheckpoint(true)
+        retire(corpusAssigned); retire(standing)
+        corpusAssigned = newAssigned; standing = newStanding
+      } { adds =>
+        // persisted: both the batch-node scoring and the touched-cell
+        // screen consume the assignment; released when the batch commits
+        val batchAssigned = ExtQueries.knnAssign(
+          adds.select(col("vec_id"), col("embedding")), cents).persist()
+        try emit(ExtQueries.knnAttach(corpusAssigned, standing, batchAssigned))
+        finally batchAssigned.unpersist()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    releaseOnTermination(batches.sparkSession, query,
-      Seq(cents, corpusAssigned, standing))
-    query
+    }, Seq(cents, corpusAssigned, standing))
   }
 
   // ---- trending tokens ----------------------------------------------------
@@ -1156,12 +1035,9 @@ object Streaming {
     * produced exactly once across restarts. */
   def startTrending(docs: DataFrame, horizon: String, every: String, k: Int,
       ckpt: String)(write: DataFrame => Unit): StreamingQuery =
-    tokenWindowCounts(docs, horizon, every).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) => write(trendingTokens(batch, k)) }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(tokenWindowCounts(docs, horizon, every), ckpt) { (batch, _) =>
+      write(trendingTokens(batch, k))
+    }
 
   /** Streaming heavy-hitter WATCHLIST per tumbling window — the
     * [[graft.functions.MisraGriesAggregator]] sketch run inside the
@@ -1199,12 +1075,9 @@ object Streaming {
     * once across restarts ([[startTrending]]'s contract). */
   def startHeavyHitters(docs: DataFrame, horizon: String, every: String,
       k: Int, ckpt: String)(write: DataFrame => Unit): StreamingQuery =
-    heavyHitterWindows(docs, horizon, every, k).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) => write(batch) }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(heavyHitterWindows(docs, horizon, every, k), ckpt) { (batch, _) =>
+      write(batch)
+    }
 
   /** Streaming Count-Min grid per tumbling window — the online form of
     * [[graft.queries.ExtQueries.countMin]]'s sketch, and the sketch whose
@@ -1242,12 +1115,9 @@ object Streaming {
     * once across restarts ([[startTrending]]'s contract). */
   def startCountMin(docs: DataFrame, horizon: String, every: String,
       ckpt: String)(write: DataFrame => Unit): StreamingQuery =
-    countMinWindows(docs, horizon, every).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) => write(batch) }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(countMinWindows(docs, horizon, every), ckpt) { (batch, _) =>
+      write(batch)
+    }
 
   /** Streaming length-distribution histogram per tumbling window — the
     * online half of the drift monitor: per (window, token-length bucket)
@@ -1324,14 +1194,9 @@ object Streaming {
     * verdict is produced exactly once across restarts. */
   def startDriftMonitor(docs: DataFrame, reference: DataFrame, horizon: String,
       every: String, ckpt: String)(write: DataFrame => Unit): StreamingQuery =
-    driftWindows(docs, horizon, every).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        write(windowDrift(batch, reference))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    startBatches(driftWindows(docs, horizon, every), ckpt) { (batch, _) =>
+      write(windowDrift(batch, reference))
+    }
 
   /** One input event for [[funnelStream]]. */
   case class FunnelEvent(user_id: Long, event_id: Long, ts: Timestamp,
@@ -1343,26 +1208,6 @@ object Streaming {
     * conversion time in epoch micros. */
   case class FunnelState(step: Int, tUs: Long)
 
-  /** Streaming ordered-funnel progression — the ONLINE form of
-    * [[graft.queries.ExtQueries.funnel]]: the same strictly-after rule
-    * (step k's conversion is the first step-k event later than step k−1's
-    * conversion time), run as a per-user state machine that emits a
-    * [[FunnelProgress]] row the moment a user advances. The batch form
-    * answers "how many converted"; this answers it continuously, which is
-    * what a launch-day dashboard actually consumes.
-    *
-    * In-batch ordering: events arrive unordered per key within a
-    * micro-batch, so each group slice sorts by full timestamp + event_id
-    * (the [[sessionize]] device) before the walk; across batches the state
-    * carries (step, t). Events that arrive LATE across a batch boundary —
-    * after a later event already advanced the step — are ignored, the
-    * standard at-the-watermark tradeoff of every online funnel (the batch
-    * operator over the full log is the reconciliation).
-    *
-    * At scale: state is TWO numbers per user (the smallest state of any
-    * stateful op here); the shuffle groups by user_id — the batch form's
-    * partitioning; emitted rows are step advances only (≤ |steps| per user
-    * ever), so the sink sees a trickle, not the event stream. */
   /** The pure funnel walk: fold TIME-ORDERED (event_type, us) pairs into
     * the carried state, returning the advanced state and the emitted
     * progress rows. Factored out of the stream so the property spec can
@@ -1384,6 +1229,26 @@ object Streaming {
     (s, out)
   }
 
+  /** Streaming ordered-funnel progression — the ONLINE form of
+    * [[graft.queries.ExtQueries.funnel]]: the same strictly-after rule
+    * (step k's conversion is the first step-k event later than step k−1's
+    * conversion time), run as a per-user state machine that emits a
+    * [[FunnelProgress]] row the moment a user advances. The batch form
+    * answers "how many converted"; this answers it continuously, which is
+    * what a launch-day dashboard actually consumes.
+    *
+    * In-batch ordering: events arrive unordered per key within a
+    * micro-batch, so each group slice sorts by full timestamp + event_id
+    * (the [[sessionize]] device) before the walk; across batches the state
+    * carries (step, t). Events that arrive LATE across a batch boundary —
+    * after a later event already advanced the step — are ignored, the
+    * standard at-the-watermark tradeoff of every online funnel (the batch
+    * operator over the full log is the reconciliation).
+    *
+    * At scale: state is TWO numbers per user (the smallest state of any
+    * stateful op here); the shuffle groups by user_id — the batch form's
+    * partitioning; emitted rows are step advances only (≤ |steps| per user
+    * ever), so the sink sees a trickle, not the event stream. */
   def funnelStream(events: Dataset[FunnelEvent]): Dataset[FunnelProgress] = {
     val spark = events.sparkSession
     import spark.implicits._

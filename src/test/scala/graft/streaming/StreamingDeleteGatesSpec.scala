@@ -11,7 +11,7 @@ import graft.SparkFixture
   * Pins:
   *
   *  - MEDIA DUP GATE: after a mid-stream tombstone batch, verdicts equal
-  *    restart-with-survivors (a fresh static gate over the survivor
+  *    restart-with-survivors (a fresh gate over the survivor
   *    corpus), and a probe whose ONLY perceptual match was the deleted
   *    document stops matching — live, no restart;
   *  - FILTERED VECTOR GATE: the delete-aware gate is the ADAPTIVE serve,
@@ -65,7 +65,7 @@ class StreamingDeleteGatesSpec extends AnyFunSuite {
 
     val perBatch =
       scala.collection.mutable.ArrayBuffer.empty[Map[Long, Option[(Long, Long)]]]
-    Streaming.startMediaDupGateWithDeletes(
+    Streaming.startMediaDupGate(
       spark.readStream.schema(df(Seq(("add", 0L, ""))).schema)
         .option("maxFilesPerTrigger", 1).parquet(in),
       corpus, ckpt) { verdicts =>
@@ -87,7 +87,7 @@ class StreamingDeleteGatesSpec extends AnyFunSuite {
     assert(want1(probeId).exists(_._1 == onlyMatch) && want3(probeId).isEmpty,
       "the unique-match probe must go clean after the tombstone")
 
-    // restart-with-survivors parity via the non-delete static gate
+    // restart-with-survivors parity: a fresh gate fed an op-less stream
     val in2 = Files.createTempDirectory("graft-mdgd-in2").toString
     val ckpt2 = Files.createTempDirectory("graft-mdgd-ckpt2").toString
     probes.toSeq.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in2)

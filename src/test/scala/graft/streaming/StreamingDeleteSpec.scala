@@ -1,7 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
 
@@ -10,7 +15,7 @@ import graft.SparkFixture
   * batch half is oracle-gated via `e_index_delete`). Pins:
   *
   *  - NEAR-DUP GATE: after a mid-stream tombstone batch, verdicts equal
-  *    restart-with-survivors (a fresh static gate over the survivor
+  *    restart-with-survivors (a fresh gate over the survivor
   *    corpus), and a probe whose ONLY match was the deleted document
   *    stops matching — live, in the same stream, no restart;
   *  - KNN ATTACH GATE: after a tombstone batch, the attach output equals
@@ -19,7 +24,11 @@ import graft.SparkFixture
   *    end through the gate), no emitted edge references a deleted id,
   *    and the fixture forces real promotions (a naive anti-join of the
   *    standing adjacency would be WRONG — the rescore is load-bearing);
-  *  - deletes apply before the same batch's adds (the CDC convention).
+  *  - deletes apply before the same batch's adds (the CDC convention);
+  *  - an `op` that is neither "add" nor "delete" fails the query, naming
+  *    the value, in every gate;
+  *  - an op-less stream skips the tombstone probe: fewer jobs than the
+  *    same rows tagged "add".
   */
 class StreamingDeleteSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -64,7 +73,7 @@ class StreamingDeleteSpec extends AnyFunSuite {
     addDf(probes.toSeq).coalesce(1).write.mode("append").parquet(in)
 
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Option[Long]]]
-    Streaming.startNearDupGateWithDeletes(
+    Streaming.startNearDupGate(
       spark.readStream.schema(addDf(probes.take(1).toSeq).schema)
         .option("maxFilesPerTrigger", 1).parquet(in),
       corpus, ckpt) { verdicts =>
@@ -87,8 +96,8 @@ class StreamingDeleteSpec extends AnyFunSuite {
     assert(want1(probeId).contains(onlyMatch) && want3(probeId).isEmpty,
       "the unique-match probe must go clean after the tombstone")
 
-    // restart-with-survivors parity: a FRESH static gate over the survivor
-    // corpus must produce batch 3's verdicts exactly
+    // restart-with-survivors parity: a FRESH gate over the survivor corpus,
+    // fed an op-less stream, must produce batch 3's verdicts exactly
     val in2 = Files.createTempDirectory("graft-ndgd-in2").toString
     val ckpt2 = Files.createTempDirectory("graft-ndgd-ckpt2").toString
     probes.toSeq.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in2)
@@ -131,7 +140,7 @@ class StreamingDeleteSpec extends AnyFunSuite {
     def edges(rows: Array[org.apache.spark.sql.Row]): Set[Edge] =
       rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val perBatch = scala.collection.mutable.ArrayBuffer.empty[Set[Edge]]
-    Streaming.startKnnAttachGateWithDeletes(
+    Streaming.startKnnAttachGate(
       spark.readStream.schema(withOp(a1, "add").schema)
         .option("maxFilesPerTrigger", 1).parquet(in),
       corpus, ckpt) { adj => perBatch += edges(adj.collect()) }
@@ -174,5 +183,93 @@ class StreamingDeleteSpec extends AnyFunSuite {
     Seq(cents, assignedAll, standingAll, survAssigned, survStanding)
       .foreach(_.unpersist())
     spark.catalog.clearCache()
+  }
+
+  test("gates: an op that is neither add nor delete fails the query, naming it") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val text0 = docs.select("text").as[String].head()
+    // each stream: one valid add, then one row with an unknown op
+    val textRows = Seq(("add", 90001L, text0), ("upsert", 90002L, text0))
+      .toDF("op", "doc_id", "text")
+    def vecRow(op: String, first: Column) = vecs.orderBy(first).limit(1)
+      .select(lit(op).as("op"), (col("vec_id") + lit(90000L)).as("vec_id"),
+        col("embedding"))
+    val vecRows = vecRow("add", col("vec_id").asc)
+      .unionByName(vecRow("upsert", col("vec_id").desc))
+    type Gate = (DataFrame, DataFrame, String) => (DataFrame => Unit) => StreamingQuery
+    def failure(rows: DataFrame, corpus: DataFrame, gate: Gate): String = {
+      val in = Files.createTempDirectory("graft-opgd-in").toString
+      val ckpt = Files.createTempDirectory("graft-opgd-ckpt").toString
+      rows.coalesce(1).write.mode("append").parquet(in)
+      var emitted = 0L
+      val q = gate(spark.readStream.schema(rows.schema).parquet(in), corpus, ckpt) {
+        out => emitted += out.collect().length
+      }
+      val e = intercept[StreamingQueryException](q.awaitTermination())
+      spark.catalog.clearCache()
+      assert(emitted == 0, "the failing batch must emit no verdicts")
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    for ((name, msg) <- Seq(
+        "near-dup" -> failure(textRows, docs, Streaming.startNearDupGate(_, _, _)),
+        "media-dup" -> failure(textRows, docs, Streaming.startMediaDupGate(_, _, _)),
+        "knn-attach" -> failure(vecRows, vecs, Streaming.startKnnAttachGate(_, _, _))))
+      assert(msg.contains("unknown op 'upsert'"), s"$name gate: $msg")
+  }
+
+  test("near-dup gate: an op-less stream skips the tombstone probe") {
+    import spark.implicits._
+    val corpus = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val rows = corpus.as[(Long, String)].take(6).toSeq.map { case (id, t) =>
+      (id + graft.queries.ExtQueries.VariantIdOffset,
+        t.trim.split("\\s+").drop(5).mkString(" "))
+    }
+    // jobs of one gate run, counted by the streaming query id every
+    // micro-batch job carries as a local property
+    def jobsOf(stream: DataFrame): (Int, Set[Long]) = {
+      val in = Files.createTempDirectory("graft-ndgj-in").toString
+      val ckpt = Files.createTempDirectory("graft-ndgj-ckpt").toString
+      stream.coalesce(1).write.mode("append").parquet(in)
+      val sc = spark.sparkContext
+      val seen = new ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties)
+            .flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+            .orElse(Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
+            .foreach(seen.add)
+      }
+      sc.addSparkListener(listener)
+      try {
+        var ids = Set.empty[Long]
+        val q = Streaming.startNearDupGate(
+          spark.readStream.schema(stream.schema).parquet(in), corpus, ckpt) { v =>
+          ids ++= v.select("doc_id").as[Long].collect()
+        }
+        q.awaitTermination()
+        spark.catalog.clearCache()
+        // the listener bus delivers in order: once the marker job is seen,
+        // every job of the query has been seen too
+        val marker = s"marker-${java.util.UUID.randomUUID()}"
+        sc.setJobGroup(marker, marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+        while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(seen.contains(marker), "listener never saw the marker job")
+        (seen.asScala.count(_ == q.id.toString), ids)
+      } finally sc.removeSparkListener(listener)
+    }
+    val (plain, plainIds) = jobsOf(rows.toDF("doc_id", "text"))
+    val (tagged, taggedIds) = jobsOf(
+      rows.map { case (id, t) => ("add", id, t) }.toDF("op", "doc_id", "text"))
+    assert(plainIds == rows.map(_._1).toSet && taggedIds == plainIds,
+      "one verdict per incoming document either way")
+    assert(plain > 0 && plain < tagged,
+      s"op-less run launched $plain jobs, the op = add run $tagged")
   }
 }
