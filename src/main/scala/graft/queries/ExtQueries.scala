@@ -1309,33 +1309,8 @@ object ExtQueries {
     * callers clearCache() after materializing — the Bench/Verify teardown
     * (the file-default contract, stated here because two frames persist). */
   def jaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
-    val sets = bigramSetsKeeping(docsWithVariants(spark, dir), Nil)
-      .withColumn("bs", array_sort(col("bs")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val postings = sets.select(col("doc_id"), col("nb"), explode(col("bs")).as("g"))
-    val dfreq = postings.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val prefix = postings.join(dfreq, Seq("g"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)))
-      .filter(col("rn") <= col("nb") - expr("(nb + 1) div 2") + 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = prefix.as("x")
-      .join(prefix.as("y"),
-        col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id") &&
-          lit(2) * least(col("x.nb"), col("y.nb")) >= greatest(col("x.nb"), col("y.nb")))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      // rn is each document's position in the SAME global (df, g) order, so
-      // the maximal shared prefix gram g* carries BOTH max(rn_x) and
-      // max(rn_y) — plain primitive maxes, deliberately not max(struct)
-      // (scaladoc: HashAggregate vs SortAggregate)
-      .agg(max(col("x.rn")).as("px"), max(col("y.rn")).as("py"),
-        max(col("x.nb")).as("na"), max(col("y.nb")).as("nbb"),
-        count(lit(1)).as("c"))
-      .filter(lit(3) * (col("c")
-          + least(col("na") - col("px"), col("nbb") - col("py")))
-        >= col("na") + col("nbb"))
-      .select(col("doc_a"), col("doc_b"))
-    cand
+    val (sets, _, prefix) = jaccardPrefixIndex(spark, dir)
+    jaccardPrefixCandidates(prefix).select(col("doc_a"), col("doc_b"))
       .join(sets.select(col("doc_id").as("doc_a"), col("bs").as("bs_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("bs").as("bs_b")), Seq("doc_b"))
       .withColumn("n_inter",
@@ -1353,7 +1328,25 @@ object ExtQueries {
     * (the scale claims), not just matching the truth. */
   private[queries] def jaccardPrefixCandidateCounts(
       spark: SparkSession, dir: String): (Long, Long, Long) = {
+    val (sets, postings, prefix) = jaccardPrefixIndex(spark, dir)
+    def pairs(p: DataFrame): Long = p.as("x")
+      .join(p.as("y"), col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id"), col("y.doc_id")).distinct().count()
+    val res = (jaccardPrefixCandidates(prefix).count(), pairs(prefix), pairs(postings))
+    prefix.unpersist()
+    sets.unpersist()
+    res
+  }
+
+  /** [[jaccardPrefix]]'s index — (`sets` with `bs` array_sort'ed, its
+    * bigram `postings`, the (df, g)-ranked `prefix` postings), `sets` and
+    * `prefix` persisted — derived in one place for the key and
+    * [[jaccardPrefixCandidateCounts]], so the pruning the spec measures is
+    * the key's own. */
+  private def jaccardPrefixIndex(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
     val sets = bigramSetsKeeping(docsWithVariants(spark, dir), Nil)
+      .withColumn("bs", array_sort(col("bs")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val postings = sets.select(col("doc_id"), col("nb"), explode(col("bs")).as("g"))
     val dfreq = postings.groupBy(col("g")).agg(count(lit(1)).as("df"))
@@ -1362,26 +1355,28 @@ object ExtQueries {
         Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)))
       .filter(col("rn") <= col("nb") - expr("(nb + 1) div 2") + 1)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def pairs(p: DataFrame): Long = p.as("x")
-      .join(p.as("y"), col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id"), col("y.doc_id")).distinct().count()
-    val positional = prefix.as("x")
+    (sets, postings, prefix)
+  }
+
+  /** The prefix self-join of [[jaccardPrefixIndex]] reduced per pair
+    * `(doc_a, doc_b)` under the length and positional filters
+    * ([[jaccardPrefix]]'s scaladoc). */
+  private def jaccardPrefixCandidates(prefix: DataFrame): DataFrame =
+    prefix.as("x")
       .join(prefix.as("y"),
         col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id") &&
           lit(2) * least(col("x.nb"), col("y.nb")) >= greatest(col("x.nb"), col("y.nb")))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      // rn is each document's position in the SAME global (df, g) order, so
+      // the maximal shared prefix gram g* carries BOTH max(rn_x) and
+      // max(rn_y) — plain primitive maxes, deliberately not max(struct)
+      // (scaladoc: HashAggregate vs SortAggregate)
       .agg(max(col("x.rn")).as("px"), max(col("y.rn")).as("py"),
         max(col("x.nb")).as("na"), max(col("y.nb")).as("nbb"),
         count(lit(1)).as("c"))
       .filter(lit(3) * (col("c")
           + least(col("na") - col("px"), col("nbb") - col("py")))
         >= col("na") + col("nbb"))
-      .count()
-    val res = (positional, pairs(prefix), pairs(postings))
-    prefix.unpersist()
-    sets.unpersist()
-    res
-  }
 
   /** LSH signature sizing (cosine family). The near-dup DEDUP path uses
     * 64 planes → 4 bands × 16 bits: 2¹⁶ = 65,536 buckets per band, so the
@@ -6622,13 +6617,13 @@ object ExtQueries {
 
   /** CHAINED BPE tokenizer training — the trainer behind [[bpeMerges]]'s
     * single pair-count pass, completing the trainer family
-    * ([[kmeansTrain]], [[pqTrain]]): [[BpeTrainRounds]] rounds of
+    * ([[kmeansTrain]], [[pqTrain]]): up to [[BpeTrainRounds]] rounds of
     * count-pairs → pick-best → merge-everywhere over the corpus-frequency-
     * weighted DISTINCT vocabulary, emitting every round's chosen merge rule
     * (`iter`, `lhs`, `rhs`, `n`) — the merge table a BPE encoder replays.
     *
     * Cross-engine exactness of the MERGE APPLICATION is the crux: both
-    * engines rewrite the symbol sequence through the SAME string device —
+    * sides rewrite the symbol sequence through the SAME string device —
     * symbols joined with TWO spaces, then one non-overlapping left-to-right
     * `replace(" l  r ", " lr ")`, then split back. The double separator
     * makes adjacent occurrences not share boundary characters, so the
@@ -6638,77 +6633,68 @@ object ExtQueries {
     * share its leading space with the first match and survive. Symbols are
     * space-free by construction (tokens are whitespace-split), so the
     * encoding is unambiguous. Tie-breaks are pinned (count DESC, lhs ASC,
-    * rhs ASC over grouped-unique pairs); all arithmetic is integer.
+    * rhs ASC over grouped-unique pairs, strings in the engines' UTF-8 byte
+    * order); all arithmetic is integer.
     *
-    * At scale, each round is the [[bpeMerges]] shape: pair extraction runs
-    * over the Zipf-bounded distinct vocabulary (checkpointed once, rewritten
-    * per round — never re-reading the corpus), pair counts map-side-combine
-    * to |symbols|² partials, the argmax is one TakeOrdered whose single
-    * winning row returns to the driver (the convergence-probe allowance) and
-    * re-enters the rewrite as literals — rounds multiply the vocab-pass
-    * cost, not the corpus-scan cost, the canonical BPE-trainer bill. */
+    * An exhausted vocabulary ends the table early: one row per round that
+    * found a pair, as in the oracle's chain. At scale: [[bpeChain]]. */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
     bpeTrainRounds(spark, dir, BpeTrainRounds)
 
-  /** [[bpeTrain]] with the round count as an explicit knob.
-    *
-    * Loop storage discipline (the [[graft.operators.ConnectedComponents]]
-    * lesson): the per-round winner is a ONE-ROW argmax, so it comes back to
-    * the driver like the repo's aggregate-to-scalar convergence probes —
-    * re-entering it as literals instead of a crossJoin keeps each round's
-    * plan from embedding the previous round's twice (state + best both
-    * derive from state_{r−1}: the join formulation DOUBLES the plan per
-    * round, measured minutes of analysis time by round 10). The vocabulary
-    * state is `localCheckpoint`ed per round for the same reason — flat
-    * lineage, bounded plans, regardless of round count. */
+  /** [[bpeTrain]] with the round count as an explicit knob: the merge
+    * table of [[bpeChain]], one row per round that found a pair. */
   def bpeTrainRounds(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
-    val (merges, fin) = bpeChain(spark, dir, rounds)
-    graft.operators.IterStorage.release(fin)
+    val (merges, _) = bpeChain(spark, dir, rounds)
     import spark.implicits._
     merges.toDF("iter", "lhs", "rhs", "n").orderBy("iter")
   }
 
   /** The training chain: (merge rules, FINAL symbolized vocabulary
-    * `(w, wc, syms)`). The final vocabulary is what [[bpeEncode]] serves
-    * from — returned from here so training and encoding share one chain
-    * definition (the [[kmeansChain]] device); the returned frame rides its
-    * last localCheckpoint, which the caller owns. */
+    * `(w, wc, syms)` as a local frame). The final vocabulary is what
+    * [[bpeEncode]] serves from — returned from here so training and
+    * encoding share one chain definition (the [[kmeansChain]] device).
+    *
+    * The corpus-sized step — tokens → per-word count, map-side-combined —
+    * and the symbolization (`split(w, "")`, one symbol per code point) are
+    * one Spark action; their rows are collected ONCE and every round runs
+    * in memory. SCALE CONTRACT: the merge loop holds |distinct words| rows
+    * in the Spark driver, where a single-process BPE trainer keeps its word
+    * counts. Ties compare strings in the engines' order, UTF-8 bytes
+    * (`binaryCompare`; UTF-16 `compareTo` differs past the BMP). Rounds
+    * stop at an exhausted vocabulary, so [[bpeEncode]] then serves the
+    * last one. */
   private def bpeChain(spark: SparkSession, dir: String,
       rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+    import org.apache.spark.unsafe.types.UTF8String
     require(rounds >= 1, s"round count must be >= 1, got $rounds")
-    var state = table(spark, dir, "documents")
+    val symbolized = table(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       .select(col("w"), col("wc"),
         filter(split(col("w"), ""), x => x =!= "").as("syms"))
-      .localCheckpoint(true)
-    val merges = (1 to rounds).map { it =>
-      val best = state
-        // sequence(1, n-1) DESCENDS for n = 1 (Spark yields [1, 0]), so
-        // single-symbol words must be filtered, not just left pairless
-        .filter(size(col("syms")) >= 2)
-        .select(col("wc"), col("syms"),
-          explode(sequence(lit(1), size(col("syms")) - 1)).as("i"))
-        .select(element_at(col("syms"), col("i")).as("lhs"),
-          element_at(col("syms"), col("i") + 1).as("rhs"), col("wc"))
-        .groupBy(col("lhs"), col("rhs")).agg(sum(col("wc")).as("n"))
-        .orderBy(col("n").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1)
-        .collect()(0)
-      val (l, r) = (best.getString(0), best.getString(1))
-      val next = state
-        .withColumn("padded",
-          concat(lit(" "), array_join(col("syms"), "  "), lit(" ")))
-        .select(col("w"), col("wc"),
-          filter(split(
-            replace(col("padded"), lit(s" $l  $r "), lit(s" $l$r ")),
-            " "), x => x =!= "").as("syms"))
-        .localCheckpoint(true)
-      graft.operators.IterStorage.release(state)
-      state = next
-      (it, l, r, best.getLong(2))
+    val words = symbolized.collect()
+    var syms = words.map(_.getSeq[String](2).toVector)
+    val utf8 = Ordering.fromLessThan[UTF8String](_.binaryCompare(_) < 0)
+    def bestPair(): Option[((String, String), Long)] = {
+      val n = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((s, w) <- syms.zip(words); i <- 1 until s.length)
+        n((s(i - 1), s(i))) = n.getOrElse((s(i - 1), s(i)), 0L) + w.getLong(1)
+      n.minByOption { case ((l, r), c) =>
+        (-c, UTF8String.fromString(l), UTF8String.fromString(r))
+      }(Ordering.Tuple3(Ordering.Long, utf8, utf8))
     }
-    (merges, state)
+    val merges = (1 to rounds).iterator.map { it =>
+      bestPair().map { case ((l, r), n) =>
+        syms = syms.map(s => if (s.length < 2) s else
+          (" " + s.mkString("  ") + " ").replace(s" $l  $r ", s" $l$r ")
+            .split(" ").iterator.filter(_.nonEmpty).toVector)
+        (it, l, r, n)
+      }
+    }.takeWhile(_.isDefined).flatten.toVector
+    val vocab = spark.createDataFrame(java.util.Arrays.asList(words.indices.map(i =>
+        org.apache.spark.sql.Row(words(i).get(0), words(i).get(1), syms(i))): _*),
+      symbolized.schema)
+    (merges, vocab)
   }
 
   /** BPE ENCODING from the trained merge table — closes the train→serve
@@ -6720,12 +6706,14 @@ object ExtQueries {
     *
     * Sharing [[bpeChain]] means the encoder can never apply a drifted copy
     * of the rules (the oracle likewise composes the chain CTEs' final
-    * state). At scale: encoding joins corpus tokens against the
-    * Zipf-bounded vocabulary on the word key — broadcast when the vocab
-    * fits, hash-join otherwise; per-doc counts map-side-combine. The
-    * per-word symbolization is computed ONCE in the vocab, never per token
-    * instance — the same distinct-words-first discipline as
-    * [[bpeMerges]]. */
+    * state); at an exhausted vocabulary it serves the last one. At scale:
+    * the merge rounds run in the Spark driver over the |distinct
+    * words|-row vocabulary ([[bpeChain]]'s bound), which comes back as a
+    * local frame; encoding joins corpus tokens against it on the word key — broadcast
+    * when the vocab fits, hash-join otherwise; per-doc counts
+    * map-side-combine. The per-word symbolization is computed ONCE in the
+    * vocab, never per token instance — the same distinct-words-first
+    * discipline as [[bpeMerges]]. */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val (_, vocab) = bpeChain(spark, dir, BpeTrainRounds)
     val docTok = table(spark, dir, "documents")
@@ -6797,10 +6785,12 @@ object ExtQueries {
     * Determinism: all-integer counts/sums until the two final divides.
     *
     * At scale: the per-word breakdown is computed ONCE on the
-    * Zipf-bounded vocabulary (never per token instance); the corpus
-    * re-tokenization joins that vocabulary on the word key (broadcast
-    * when it fits) and reduces map-side to |langs| rows. Composes the
-    * graded BPE chain — a harness key. */
+    * Zipf-bounded vocabulary (never per token instance), whose merge
+    * rounds run in the Spark driver over |distinct words| rows
+    * ([[bpeChain]]'s bound); the corpus re-tokenization joins that local
+    * vocabulary on the word key (broadcast when it fits) and reduces
+    * map-side to |langs| rows. Composes the graded BPE chain — a harness
+    * key. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val (_, vocab) = bpeChain(spark, dir, BpeTrainRounds)
     val wstats = vocab.select(col("w"),

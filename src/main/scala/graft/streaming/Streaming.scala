@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -403,14 +403,20 @@ object Streaming {
       try {
         val tomb = b.filter(col("op") === "delete").select(col(key))
         if (!tomb.isEmpty) drop(tomb)
-        screen(b.filter(
-          when(col("op") === "delete", false)
-            .when(col("op") === "add", true)
-            .otherwise(raise_error(concat(lit("unknown op '"),
-              coalesce(col("op"), lit("null")),
-              lit("': gate stream rows must be \"add\" or \"delete\""))))))
+        screen(b.filter(opIs("add")))
       } finally b.unpersist()
     }
+
+  /** True on rows whose `op` is `served`, false on `"delete"` rows; any
+    * other value, null included, fails the scan that evaluates it with a
+    * message naming the value — so a gate checks its stream's ops inside
+    * the scan it runs anyway, with no job of its own. */
+  private def opIs(served: String): Column =
+    when(col("op") === "delete", false)
+      .when(col("op") === served, true)
+      .otherwise(raise_error(concat(lit("unknown op '"),
+        coalesce(col("op"), lit("null")),
+        lit("': gate stream rows must be \"" + served + "\" or \"delete\""))))
 
   /** `frame` without the rows whose `key` is in `tomb`, eagerly
     * localCheckpointed: the swap TRUNCATES lineage at the survivor frame,
@@ -866,7 +872,9 @@ object Streaming {
     * The maintenance is load-bearing, not bookkeeping: the adaptive plan
     * walks cells until the counts promise the target k, so a STALE count
     * over-promises a thinned cell and the plan under-probes — serving
-    * fewer than the guaranteed k. Maintained ≡ recounted and the
+    * fewer than the guaranteed k. Any other `op`, null included, fails
+    * the query naming the value ([[opIs]], checked inside the queries
+    * scan, so it costs no job). Maintained ≡ recounted and the
     * mis-probe counterexample are both spec-pinned, along with parity vs
     * the batch adaptive serve over survivors. The probe knobs are
     * parameters (production defaults) — at the gate fixture scale every
@@ -910,7 +918,7 @@ object Streaming {
           retire(idx); retire(counts)
           idx = newIdx; counts = newCounts
         }
-        val q = b.filter(col("op") === "query")
+        val q = b.filter(opIs("query"))
           .select(col("vec_id"), col("embedding"), col("label"))
         val qcum = ExtQueries.ivfProbeScheduleFrom(counts, centTable, q)
         val qplan = ExtQueries.ivfAdaptivePlanOf(qcum, targetK, spillMax)

@@ -8,7 +8,9 @@ import graft.SparkFixture
   * non-overlapping merge scan per word, frequency-weighted pair counts,
   * (n DESC, lhs, rhs) tie-break) — the string-replace device must be
   * indistinguishable from the per-word scan it replaces — and its first
-  * round is exactly `e_bpe_merges`' top-ranked pair. */
+  * round is exactly `e_bpe_merges`' top-ranked pair. Symbols are code
+  * points and ties break in the engines' UTF-8 byte order, also past the
+  * BMP; an exhausted vocabulary ends the merge table early. */
 class BpeTrainSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   private val dir = "/root/testdata/sf0.001"
@@ -24,12 +26,23 @@ class BpeTrainSpec extends AnyFunSuite {
     buf.result()
   }
 
-  private def localTrain(rounds: Int): Seq[(Int, String, String, Long)] = {
-    val words = spark.read.parquet(s"$dir/documents.parquet")
+  /** One symbol per code point, as the engines' `split(w, "")`. */
+  private def codePoints(w: String): Vector[String] =
+    w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))
+
+  /** UTF-8 byte order, which is code point order — the engines' string
+    * order (UTF-16 `compareTo` differs past the BMP). */
+  private val engineOrder: Ordering[String] =
+    Ordering.by[String, Vector[Int]](_.codePoints().toArray.toVector)(
+      Ordering.Implicits.seqOrdering[Vector, Int])
+
+  private def localTrain(rounds: Int,
+      corpus: String = dir): Seq[(Int, String, String, Long)] = {
+    val words = spark.read.parquet(s"$corpus/documents.parquet")
       .select("text").collect().map(_.getString(0))
       .flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
       .groupBy(identity).map { case (w, xs) => w -> xs.length.toLong }
-    var vocab: Map[Vector[String], Long] = words.groupBy(_._1.split("").filter(_.nonEmpty).toVector)
+    var vocab: Map[Vector[String], Long] = words.groupBy(w => codePoints(w._1))
       .map { case (syms, ws) => syms -> ws.values.sum }
     (1 to rounds).map { it =>
       val counts = scala.collection.mutable.Map.empty[(String, String), Long]
@@ -38,7 +51,8 @@ class BpeTrainSpec extends AnyFunSuite {
           counts((p(0), p(1))) = counts.getOrElse((p(0), p(1)), 0L) + wc
         }
       }
-      val ((l, r), n) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+      val ((l, r), n) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }(
+        Ordering.Tuple3(Ordering.Long, engineOrder, engineOrder))
       vocab = vocab.toSeq.map { case (syms, wc) => (applyMerge(syms, l, r), wc) }
         .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).sum }
       (it, l, r, n)
@@ -70,7 +84,7 @@ class BpeTrainSpec extends AnyFunSuite {
     val want = docs.map { case (id, t) =>
       val words = t.trim.split("\\s+").filter(_.nonEmpty)
       val nBpe = words.map { w =>
-        var syms = w.split("").filter(_.nonEmpty).toVector
+        var syms = codePoints(w)
         rules.foreach { case (l, r) => syms = applyMerge(syms, l, r) }
         syms.length.toLong
       }.sum
@@ -94,5 +108,36 @@ class BpeTrainSpec extends AnyFunSuite {
       .as[(String, Long)].collect().head
     spark.catalog.clearCache()
     assert(first._2 + first._3 == top._1 && first._4 == top._2)
+  }
+
+  private def corpus(texts: String*): String = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .write.parquet(s"$tmp/documents.parquet")
+    tmp
+  }
+
+  private def train(corpusDir: String, rounds: Int): Seq[(Int, String, String, Long)] = {
+    import spark.implicits._
+    ExtQueries.bpeTrainRounds(spark, corpusDir, rounds)
+      .as[(Int, String, String, Long)].collect().toSeq
+  }
+
+  test("an exhausted vocabulary ends the merge table at its last pair") {
+    // round 1 merges "ab"; then every word is one symbol and no pair is left
+    assert(train(corpus("ab ab c"), 3) == Seq((1, "a", "b", 2L)))
+  }
+
+  test("ties break in engine (UTF-8) order; symbols are code points") {
+    val tmp = corpus("ｚb 😀b")
+    // U+FF5A sorts before U+1F600 in UTF-8 bytes, but after its UTF-16
+    // high surrogate: a String.compareTo trainer would pick the emoji
+    assert("ｚ".compareTo("😀") > 0 && engineOrder.lt("ｚ", "😀"))
+    assert(train(tmp, 1) == Seq((1, "ｚ", "b", 1L)))
+    // the emoji is ONE symbol: round 2 merges it whole, then nothing is left
+    val want = Seq((1, "ｚ", "b", 1L), (2, "😀", "b", 1L))
+    assert(train(tmp, 3) == want)
+    assert(localTrain(2, tmp) == want)
   }
 }

@@ -559,7 +559,7 @@ class PlanSpec extends AnyFunSuite {
     val plan = formatted(ExtQueries.bpeEncode(spark, dir))
     assert(!plan.contains("CartesianProduct"))
     assert(parquetScans(plan) == 1,
-      "the symbolized vocabulary must ride the chain's checkpoint, not " +
+      "the symbolized vocabulary must be the chain's local frame, not " +
         "re-derive from the corpus per consumer")
     spark.catalog.clearCache()
   }

@@ -26,7 +26,8 @@ import graft.SparkFixture
   *    standing adjacency would be WRONG — the rescore is load-bearing);
   *  - deletes apply before the same batch's adds (the CDC convention);
   *  - an `op` that is neither "add" nor "delete" fails the query, naming
-  *    the value, in every gate;
+  *    the value, in every gate (the filtered vector gate: neither "query"
+  *    nor "delete");
   *  - an op-less stream skips the tombstone probe: fewer jobs than the
   *    same rows tagged "add".
   */
@@ -199,26 +200,42 @@ class StreamingDeleteSpec extends AnyFunSuite {
         col("embedding"))
     val vecRows = vecRow("add", col("vec_id").asc)
       .unionByName(vecRow("upsert", col("vec_id").desc))
-    type Gate = (DataFrame, DataFrame, String) => (DataFrame => Unit) => StreamingQuery
-    def failure(rows: DataFrame, corpus: DataFrame, gate: Gate): String = {
-      val in = Files.createTempDirectory("graft-opgd-in").toString
-      val ckpt = Files.createTempDirectory("graft-opgd-ckpt").toString
-      rows.coalesce(1).write.mode("append").parquet(in)
-      var emitted = 0L
-      val q = gate(spark.readStream.schema(rows.schema).parquet(in), corpus, ckpt) {
-        out => emitted += out.collect().length
-      }
-      val e = intercept[StreamingQueryException](q.awaitTermination())
-      spark.catalog.clearCache()
-      assert(emitted == 0, "the failing batch must emit no verdicts")
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(t => String.valueOf(t.getMessage)).mkString("\n")
-    }
     for ((name, msg) <- Seq(
         "near-dup" -> failure(textRows, docs, Streaming.startNearDupGate(_, _, _)),
         "media-dup" -> failure(textRows, docs, Streaming.startMediaDupGate(_, _, _)),
         "knn-attach" -> failure(vecRows, vecs, Streaming.startKnnAttachGate(_, _, _))))
       assert(msg.contains("unknown op 'upsert'"), s"$name gate: $msg")
+  }
+
+  test("filtered vector gate: an op that is neither query nor delete fails, naming it") {
+    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding", "label")
+    // one valid query, then one row with an op this gate does not serve
+    def row(op: String, first: Column) = vecs.orderBy(first).limit(1)
+      .select(lit(op).as("op"), col("vec_id"), col("embedding"), col("label"))
+    val msg = failure(row("query", col("vec_id").asc)
+        .unionByName(row("add", col("vec_id").desc)), vecs,
+      Streaming.startFilteredVectorGateWithDeletes(_, _, _))
+    assert(msg.contains("unknown op 'add'"), msg)
+  }
+
+  private type Gate = (DataFrame, DataFrame, String) => (DataFrame => Unit) => StreamingQuery
+
+  /** Runs `gate` over a stream of `rows` against `corpus`; the query must
+    * fail and emit nothing. Returns its cause chain's messages. */
+  private def failure(rows: DataFrame, corpus: DataFrame, gate: Gate): String = {
+    val in = Files.createTempDirectory("graft-opgd-in").toString
+    val ckpt = Files.createTempDirectory("graft-opgd-ckpt").toString
+    rows.coalesce(1).write.mode("append").parquet(in)
+    var emitted = 0L
+    val q = gate(spark.readStream.schema(rows.schema).parquet(in), corpus, ckpt) {
+      out => emitted += out.collect().length
+    }
+    val e = intercept[StreamingQueryException](q.awaitTermination())
+    spark.catalog.clearCache()
+    assert(emitted == 0, "the failing batch must emit no verdicts")
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
   }
 
   test("near-dup gate: an op-less stream skips the tombstone probe") {
