@@ -24,17 +24,6 @@ object Bench {
       println(s"""{"metric":"keys","keys":$ks,"harness_keys":$hk}""")
       return
     }
-    // Harness-attribution memo (tools/BENCH_PROTOCOL.md): graded rank lists
-    // materialize to a scratch dir once per bench run — the untimed warmup
-    // populates it, so measured harness keys (e_ann_recall, e_recall_at_k,
-    // e_rank_metrics, e_ann_cost, e_filter_recall, e_filter_cost) pay their
-    // own marginal work instead of re-executing every constituent family.
-    // Bench-only: Verify and the test suites never open a memo scope, so
-    // the correctness gate is untouched.
-    BenchMemo.using(run())
-  }
-
-  private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val queries = GraftSession.selectedQueries

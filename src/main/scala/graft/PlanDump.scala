@@ -10,27 +10,17 @@ import org.apache.spark.sql.execution.ExplainMode
   * distinct parquet scans; the PushedFilters and ReadSchema of every scan
   * are in the written plan file.
   *
-  * The session is [[GraftSession.local]], as in [[Bench]]. Explain
-  * itself is driver-side, but CONSTRUCTING some frames runs jobs: the
-  * Louvain keys eagerly localCheckpoint their substrates
-  * when those are not memo-backed, so a default dump executes those pin
-  * jobs and captures the full-lineage plan — NOT literally the plan the
-  * bench executes (Bench runs inside a [[BenchMemo]] scope, so its
-  * Louvain/harness substrates are parquet memo scans). Set
-  * `SPARK_GRAFT_MEMO=1` to dump inside a [[BenchMemo]] scope and capture
-  * the bench-mode plan shape instead (first access materializes each memo
-  * table, which runs jobs; the memo directory is deleted afterwards).
+  * The session is [[GraftSession.local]], as in [[Bench]], and each key
+  * builds the same frame Bench and Verify build. Explain itself is
+  * driver-side, but CONSTRUCTING some frames runs jobs: the Louvain keys
+  * eagerly localCheckpoint their substrates, so a dump executes those pin
+  * jobs.
   * AQE nodes show the initial plan — the Exchange/join-strategy shape the
   * optimizer chose, which is what the plan pins assert about. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <tag> key [key ...]")
     val (outDir, tag, keys) = (args(0), args(1), args.drop(2).toSeq)
-    if (sys.env.contains("SPARK_GRAFT_MEMO")) BenchMemo.using(dump(outDir, tag, keys))
-    else dump(outDir, tag, keys)
-  }
-
-  private def dump(outDir: String, tag: String, keys: Seq[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

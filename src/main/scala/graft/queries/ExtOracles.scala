@@ -3748,21 +3748,13 @@ object ExtOracles {
       |WHERE ch.chosen_id <> rj.rejected_id
       |ORDER BY ch.source""".stripMargin
 
-  /** `e_canonical_pick` — COMPOSES the graded `e_dup_clusters` text (the
-    * cluster assignment) with the shared `qualityCtes` battery (the rank),
-    * then picks per-cluster best under (keep DESC, n_tokens DESC, doc_id
-    * ASC). Mirrors `ExtQueries.canonicalPick`. */
-  /** `e_bpe_train` — the [[ExtQueries.BpeTrainRounds]] chained BPE merge
-    * rounds UNROLLED as generated CTE blocks (the `kmeansChainCtes` /
-    * `beamSearchSql` device). The merge application is the SAME
-    * double-space string-replace the Spark side runs (non-overlapping
-    * left-to-right `replace`, identical in DuckDB and the JVM), so the
-    * chained states are bit-identical by construction; ties pinned
-    * (n DESC, lhs ASC, rhs ASC). */
   /** The [[ExtQueries.BpeTrainRounds]]-round BPE chain as CTE text
     * (vocab → s0 → p/b/s per round) — shared by `e_bpe_train` (reads every
     * round's `b` winner) and `e_bpe_encode` (reads the final `s` state), so
-    * the encoder cannot serve a drifted copy of the trainer's rules. */
+    * the encoder cannot serve a drifted copy of the trainer's rules. A
+    * round whose `b` is empty (no adjacent pair left) carries its
+    * predecessor state forward unchanged, so an exhausted vocabulary
+    * serves its last state, as the Spark side does. */
   private lazy val bpeChainCtes: String = {
     // s/b MATERIALIZED (the labelPropSql note): each round references its
     // predecessor state twice (pair count + merge apply) and its best
@@ -3777,11 +3769,12 @@ object ExtOracles {
         |  ORDER BY n DESC, lhs ASC, rhs ASC LIMIT 1),
         |s$r AS MATERIALIZED (
         |  SELECT w, wc,
+        |    CASE WHEN b.lhs IS NULL THEN syms ELSE
         |    list_filter(string_split(
         |      replace(' ' || array_to_string(syms, '  ') || ' ',
         |              ' ' || b.lhs || '  ' || b.rhs || ' ',
-        |              ' ' || b.lhs || b.rhs || ' '), ' '), x -> x <> '') AS syms
-        |  FROM s${r - 1}, b$r b)""".stripMargin
+        |              ' ' || b.lhs || b.rhs || ' '), ' '), x -> x <> '') END AS syms
+        |  FROM s${r - 1} LEFT JOIN b$r b ON true)""".stripMargin
     s"""vocab AS (
       |  SELECT w, count(*) AS wc FROM (
       |    SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
@@ -3791,6 +3784,13 @@ object ExtOracles {
       |${(1 to ExtQueries.BpeTrainRounds).map(round).mkString(",\n")}""".stripMargin
   }
 
+  /** `e_bpe_train` — the [[ExtQueries.BpeTrainRounds]] chained BPE merge
+    * rounds UNROLLED as generated CTE blocks (the `kmeansChainCtes` /
+    * `beamSearchSql` device). The merge application is the SAME
+    * double-space string-replace the Spark side runs (non-overlapping
+    * left-to-right `replace`, identical in DuckDB and the JVM), so the
+    * chained states are bit-identical by construction; ties pinned
+    * (n DESC, lhs ASC, rhs ASC). */
   private lazy val bpeTrainSql: String =
     s"""WITH $bpeChainCtes
       |SELECT iter, lhs, rhs, CAST(n AS BIGINT) AS n FROM (
@@ -3859,6 +3859,10 @@ object ExtOracles {
       |FROM all_ids a LEFT JOIN cl ON a.doc_id = cl.doc_id
       |ORDER BY a.doc_id""".stripMargin
 
+  /** `e_canonical_pick` — COMPOSES the graded `e_dup_clusters` text (the
+    * cluster assignment) with the shared `qualityCtes` battery (the rank),
+    * then picks per-cluster best under (keep DESC, n_tokens DESC, doc_id
+    * ASC). Mirrors `ExtQueries.canonicalPick`. */
   private lazy val canonicalPickSql: String =
     s"""WITH dc AS (SELECT doc_id, cluster_id
       |    FROM (${baseSql("e_dup_clusters")}) t),

@@ -39,9 +39,8 @@ import graft.functions.GraftFunctions._
   * plus the RDD sweep after every key, and the test fixture does the
   * same between suites — so a persisted intermediate never leaks into
   * the next key's timed window or executor memory. Keys whose caching is
-  * NON-obvious (a persist serving a sibling key, a memoized substrate, a
-  * per-round checkpoint chain) carry their own CACHING CONTRACT note on
-  * top of this default.
+  * NON-obvious (a persist serving a sibling key, a per-round checkpoint
+  * chain) carry their own CACHING CONTRACT note on top of this default.
   */
 object ExtQueries {
   import RefQueries.table
@@ -134,68 +133,6 @@ object ExtQueries {
         col("label"))
       .orderBy("doc_id")
   }
-
-  // ---- bench-only harness memo --------------------------------------------
-
-  /** Bench-only graded-list memo — the harness-attribution device of
-    * `tools/BENCH_PROTOCOL.md`: inside a [[graft.BenchMemo]] scope (opened
-    * by [[graft.Bench]]), a graded rank list materializes to parquet under
-    * the scope's scratch directory ONCE, and every later
-    * consumer — within one harness key or across the four that compose the
-    * same families ([[annRecall]], [[recallAtK]], [[rankMetrics]],
-    * [[annCost]]; [[filterRecall]]/[[filterCost]] for the filtered
-    * family) — reads the file instead of re-executing the family. The
-    * bench's untimed warmup pass populates the memo, so each MEASURED
-    * harness key pays its own marginal work, not its constituents'
-    * rebuild — harness bench cost then grows with the number of harness
-    * keys, not (families × harnesses). Correctness runs (Verify, the test
-    * suites) never open a memo scope, so the oracle composition discipline
-    * and every plan pin are untouched; the scope is read per call, so code
-    * outside it behaves exactly as without the memo. */
-  private def benchMemo(spark: SparkSession, dir: String, name: String)
-      (df: => DataFrame): DataFrame =
-    graft.BenchMemo.root match {
-      case Some(root) =>
-        // the sanitized name alone is non-injective (/data/sf0.1 and
-        // /data_sf0.1 would collide); the md5 suffix keys the memo to the
-        // RAW dir string, so a JVM benching two fixture dirs can never
-        // serve one dir's graded lists to the other's harness keys
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + digest
-        val path = new org.apache.hadoop.fs.Path(s"$root/$safe/$name")
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // gate on the commit marker, not bare directory existence: a write
-        // that died partway (Bench's warmup swallows exceptions) leaves a
-        // directory without _SUCCESS, and serving that truncated list to
-        // every later harness key would silently corrupt the artifact —
-        // overwrite mode clears the partial remains
-        if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-          df.write.mode("overwrite").parquet(path.toString)
-        spark.read.parquet(path.toString)
-      case None => df
-    }
-
-  /** [[labelPropParts]] through the bench memo — the graph-family
-    * extension of the graded-list memo (round 15): the knn adjacency and
-    * the propagated label frame are the shared substrate of FIVE harness
-    * keys ([[modularity]], [[datasheet]]'s audit section, plus the
-    * adjacency alone under [[kcore]], [[graphRecall]], [[triangles]],
-    * [[hits]], [[randWalk]], [[cosineTopkBeamParams]], [[incrKnn]],
-    * [[indexDeleteImpl]]), so in a bench JVM each materializes ONCE and
-    * every harness key pays only its marginal work. The `lazy val` shares
-    * one substrate build between the two memo writes when both are cold.
-    * Correctness runs never open a memo scope — composition untouched. */
-  private def labelPropPartsMemo(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    if (graft.BenchMemo.root.isDefined) {
-      // labels derive FROM the memoized adjacency: when knn_adjacency is
-      // already warm (the common warmup order) a cold lp_labels costs only
-      // the propagation rounds, never a second graph build
-      val knn = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
-      (knn, benchMemo(spark, dir, "lp_labels")(
-        labelsFromGraph(spark, dir, knn)))
-    } else labelPropParts(spark, dir)
 
   // ---- e_cosine_topk ------------------------------------------------------
 
@@ -513,21 +450,20 @@ object ExtQueries {
     * lives in its own operator); left joins on the (qid, cid) pair, which
     * is unique per list, so counts are exact hit counts. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
-    val ex = m("exact")(cosineTopk(spark, dir)).select(col("qid"), col("cid"))
+    val ex = cosineTopk(spark, dir).select(col("qid"), col("cid"))
     val lists = Seq(
-      "lsh" -> m("lsh")(cosineTopkLsh(spark, dir)),
-      "ivf" -> m("ivf")(cosineTopkIvf(spark, dir)),
-      "ivf2" -> m("ivf2")(ivfNprobe(spark, dir)),
-      "pq" -> m("pq")(cosineTopkPq(spark, dir)),
-      "beam" -> m("beam")(cosineTopkBeam(spark, dir)),
-      "ivf_t" -> m("ivf_t")(cosineTopkIvfTrained(spark, dir)),
-      "pq_t" -> m("pq_t")(cosineTopkPqTrained(spark, dir)),
-      "ivfpq" -> m("ivfpq")(cosineTopkIvfPq(spark, dir)),
-      "sq" -> m("sq")(sqTopk(spark, dir)),
-      "sqr" -> m("sqr")(sqRerank(spark, dir)),
-      "ivfpqr" -> m("ivfpqr")(ivfPqRerank(spark, dir)),
-      "mrl" -> m("mrl")(mrlRerank(spark, dir)))
+      "lsh" -> cosineTopkLsh(spark, dir),
+      "ivf" -> cosineTopkIvf(spark, dir),
+      "ivf2" -> ivfNprobe(spark, dir),
+      "pq" -> cosineTopkPq(spark, dir),
+      "beam" -> cosineTopkBeam(spark, dir),
+      "ivf_t" -> cosineTopkIvfTrained(spark, dir),
+      "pq_t" -> cosineTopkPqTrained(spark, dir),
+      "ivfpq" -> cosineTopkIvfPq(spark, dir),
+      "sq" -> sqTopk(spark, dir),
+      "sqr" -> sqRerank(spark, dir),
+      "ivfpqr" -> ivfPqRerank(spark, dir),
+      "mrl" -> mrlRerank(spark, dir))
     val joined = lists.foldLeft(ex) { case (acc, (tag, df)) =>
       val slim = df.select(col("qid").as(s"${tag}_q"), col("cid").as(s"${tag}_c"))
       acc.join(slim,
@@ -679,18 +615,17 @@ object ExtQueries {
     * lives in its operator (the [[annRecall]] argument). Composes graded
     * operators — a harness key. */
   def recallAtK(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
-    val ex = m("exact")(cosineTopk(spark, dir))
+    val ex = cosineTopk(spark, dir)
       .select(col("qid"), col("cid"), col("rank"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val fams = Seq(
-      "ivfpq" -> m("ivfpq")(cosineTopkIvfPq(spark, dir))
+      "ivfpq" -> cosineTopkIvfPq(spark, dir)
         .select(col("qid"), col("cid"), col("rank"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      "ivfpqr" -> m("ivfpqr")(ivfPqRerank(spark, dir))
+      "ivfpqr" -> ivfPqRerank(spark, dir)
         .select(col("qid"), col("cid"), col("rank"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      "sq" -> m("sq")(sqTopk(spark, dir))
+      "sq" -> sqTopk(spark, dir)
         .select(col("qid"), col("cid"), col("rank"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val rows = for ((tag, fam) <- fams; k <- RecallKs) yield {
@@ -746,15 +681,14 @@ object ExtQueries {
     * their SQL texts, the truth CTE MATERIALIZED — referenced four
     * times). */
   def rankMetrics(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
-    val truth = m("exact")(cosineTopk(spark, dir)).select(col("qid"), col("cid"))
+    val truth = cosineTopk(spark, dir).select(col("qid"), col("cid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qs = truth.select(col("qid")).distinct()
     val fams = Seq(
-      "ivfpq" -> m("ivfpq")(cosineTopkIvfPq(spark, dir)),
-      "ivfpqr" -> m("ivfpqr")(ivfPqRerank(spark, dir)),
-      "sq" -> m("sq")(sqTopk(spark, dir)),
-      "sqr" -> m("sqr")(sqRerank(spark, dir)))
+      "ivfpq" -> cosineTopkIvfPq(spark, dir),
+      "ivfpqr" -> ivfPqRerank(spark, dir),
+      "sq" -> sqTopk(spark, dir),
+      "sqr" -> sqRerank(spark, dir))
     val rows = fams.map { case (tag, df) =>
       val hits = df.select(col("qid"), col("cid"), col("rank"))
         .join(truth, Seq("qid", "cid"), "left_semi")
@@ -1787,7 +1721,7 @@ object ExtQueries {
     * aggregator; training amortizes over every query the index serves. */
   def ivfFilterTrained(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    val cents = trainedCentsMemo(spark, dir)
+    val cents = kmeansChain(spark, dir, KmeansIters)._2
     ivfFilterServe(ivfLabeledAssign(emb, cents),
       ivfFilterProbes(emb.filter(col("vec_id") < 8), cents))
   }
@@ -1968,8 +1902,7 @@ object ExtQueries {
     * (oracle composes their SQL texts, the truth CTE MATERIALIZED since it
     * is referenced four times). */
   def filterRecall(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
-    val truth = m("ann_filter")(annFilter(spark, dir))
+    val truth = annFilter(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val post = truth
       .agg(count(lit(1)).as("n_truth"), sum(col("in_postfilter")).as("n_hit"))
@@ -1981,11 +1914,9 @@ object ExtQueries {
         .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
         .select(lit(name).as("strategy"), col("n_truth"), col("n_hit"))
     }
-    val ivfRow = hitRow("ivf_prefilter", m("ivf_filter")(ivfFilter(spark, dir)))
-    val adRow = hitRow("ivf_adaptive",
-      m("ivf_filter_adaptive")(ivfFilterAdaptive(spark, dir)))
-    val trRow = hitRow("ivf_trained",
-      m("ivf_filter_trained")(ivfFilterTrained(spark, dir)))
+    val ivfRow = hitRow("ivf_prefilter", ivfFilter(spark, dir))
+    val adRow = hitRow("ivf_adaptive", ivfFilterAdaptive(spark, dir))
+    val trRow = hitRow("ivf_trained", ivfFilterTrained(spark, dir))
     ivfRow.unionByName(adRow).unionByName(trRow).unionByName(post)
       .withColumn("recall",
         col("n_hit").cast("double") / col("n_truth").cast("double"))
@@ -2045,7 +1976,7 @@ object ExtQueries {
     // the TRAINED quantizer's fixed-nprobe schedule — same analytic
     // (cell, label) metadata, derived from the trained assignment so the
     // ivf_trained recall row is priced like its seed sibling
-    val centsT = trainedCentsMemo(spark, dir)
+    val centsT = kmeansChain(spark, dir, KmeansIters)._2
     val qsT = ivfProbeSchedule(ivfLabeledAssign(emb, centsT), centsT,
         emb.filter(col("vec_id") < 8))
       .groupBy(col("qid"))
@@ -2329,19 +2260,6 @@ object ExtQueries {
     (all, cents)
   }
 
-  /** The FINAL trained centroid table through the bench memo (round 18):
-    * `kmeansChain(…, KmeansIters)._2` is the shared substrate of FIVE
-    * graded keys ([[cosineTopkIvfTrained]], [[ivfFilterTrained]],
-    * [[quantizerDrift]], [[silhouette]], [[filterCost]]'s trained pricing
-    * row) — each was re-running the whole Lloyd chain (one corpus scan per
-    * iteration) to rebuild the identical |cells|·dim table. Same
-    * discipline as `knn_adjacency`/`lp_labels`/`pca_v`: in a bench JVM the
-    * table materializes ONCE and every consumer pays only its marginal
-    * serve/assign work; Verify and the test suites never set the memo
-    * property, so the oracle composition (kmeansChainCtes) is untouched. */
-  private def trainedCentsMemo(spark: SparkSession, dir: String): DataFrame =
-    benchMemo(spark, dir, "kmeans_cents")(kmeansChain(spark, dir, KmeansIters)._2)
-
   /** IVF serving from the TRAINED quantizer — closes the train→serve loop
     * the seed-centroid scaladocs promise ("at scale you'd feed trained
     * centroids in"): [[kmeansChain]]'s final centroid table drives the
@@ -2351,7 +2269,7 @@ object ExtQueries {
     * (spec-measured; on a corpus with real cluster structure the trained
     * cells cut the exact-neighbor split across cell boundaries). */
   def cosineTopkIvfTrained(spark: SparkSession, dir: String): DataFrame =
-    ivfServe(spark, dir, trainedCentsMemo(spark, dir), nprobe = 1)
+    ivfServe(spark, dir, kmeansChain(spark, dir, KmeansIters)._2, nprobe = 1)
 
   // ---- e_quantizer_drift ----------------------------------------------------
 
@@ -2385,7 +2303,7 @@ object ExtQueries {
       .select(col("vec_id"), col("embedding"))
     val seed = knnAssign(emb, centroids(spark, dir, IvfCells))
       .select(col("vec_id"), col("cell").as("cell_from"))
-    val trained = knnAssign(emb, trainedCentsMemo(spark, dir))
+    val trained = knnAssign(emb, kmeansChain(spark, dir, KmeansIters)._2)
       .select(col("vec_id"), col("cell").as("cell_to"))
     seed.join(trained, Seq("vec_id"))
       .groupBy(col("cell_from"), col("cell_to"))
@@ -2416,10 +2334,9 @@ object ExtQueries {
     * overlap join and its own count); callers should clearCache() after
     * materializing. */
   def serveDrift(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
-    val seed = m("ivf")(cosineTopkIvf(spark, dir)).select(col("qid"), col("cid"))
+    val seed = cosineTopkIvf(spark, dir).select(col("qid"), col("cid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trained = m("ivf_t")(cosineTopkIvfTrained(spark, dir))
+    val trained = cosineTopkIvfTrained(spark, dir)
       .select(col("qid"), col("cid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val common = seed.join(trained, Seq("qid", "cid"), "left_semi")
@@ -3202,7 +3119,7 @@ object ExtQueries {
     * pin s = 0 — sklearn's convention, spelled out in both engines'
     * CASE. */
   def silhouette(spark: SparkSession, dir: String): DataFrame = {
-    val cents = trainedCentsMemo(spark, dir)
+    val cents = kmeansChain(spark, dir, KmeansIters)._2
     val vecs = table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("e"))
       .withColumn("nrm", l2norm(col("e")))
@@ -3977,7 +3894,7 @@ object ExtQueries {
     * the canonical table joins back on the cluster key it was grouped by
     * (co-partitioned, no extra exchange). */
   def canonicalPick(spark: SparkSession, dir: String): DataFrame = {
-    val clustered = benchMemo(spark, dir, "dup_clusters")(dupClusters(spark, dir))
+    val clustered = dupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"))
     // rank over the SAME universe the clusters cover (corpus + re-crawl
     // variants) — ranking only the base table would silently drop every
@@ -4021,7 +3938,7 @@ object ExtQueries {
     * it composes. */
   def softDedup(spark: SparkSession, dir: String): DataFrame = {
     val universe = docsWithVariants(spark, dir).select(col("doc_id"))
-    val clusters = benchMemo(spark, dir, "dup_clusters")(dupClusters(spark, dir))
+    val clusters = dupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_size"))
     universe.join(clusters, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -4129,10 +4046,6 @@ object ExtQueries {
     * operator whose own scale story is graded elsewhere; the card itself
     * unions a dozen slim rows. */
   def datasheet(spark: SparkSession, dir: String): DataFrame = {
-    // every composed graded frame rides the bench memo (the annRecall
-    // device): in a bench JVM each constituent materializes once and the
-    // card pays only its own melt/union work
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
     val nullD = lit(null).cast("double")
     def melt(section: String, src: DataFrame,
         m: (String, Column, Column)*): DataFrame =
@@ -4142,37 +4055,37 @@ object ExtQueries {
       }: _*)).as("r"))
         .select(col("r.section"), col("r.metric"), col("r.v"), col("r.v_dbl"))
     val corpus = melt("corpus",
-      m("text_stats")(textStats(spark, dir)).agg(
+      textStats(spark, dir).agg(
         count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"),
         countDistinct(col("lang")).as("n_langs")),
       ("n_docs", col("n_docs"), nullD), ("n_tokens", col("n_tokens"), nullD),
       ("n_chars", col("n_chars"), nullD), ("n_langs", col("n_langs"), nullD))
     val sources = melt("corpus",
-      m("domain_stats")(domainStats(spark, dir)).agg(count(lit(1)).as("n_sources")),
+      domainStats(spark, dir).agg(count(lit(1)).as("n_sources")),
       ("n_sources", col("n_sources"), nullD))
-    val splits = m("corpus_split")(corpusSplit(spark, dir))
+    val splits = corpusSplit(spark, dir)
       .groupBy(col("split")).agg(count(lit(1)).as("n"))
       .select(lit("split").as("section"),
         concat(lit("n_"), col("split")).as("metric"),
         col("n").as("v"), nullD.as("v_dbl"))
     val quality = melt("quality",
-      m("quality_filter")(qualityFilter(spark, dir)).agg(
+      qualityFilter(spark, dir).agg(
         count(when(col("keep"), 1)).as("n_keep"), count(lit(1)).as("n_all")),
       ("n_keep", col("n_keep"),
         col("n_keep").cast("double") / col("n_all").cast("double")))
     val nearDup = melt("dedup",
-      m("mh_pairs")(minhashDedup(spark, dir)).agg(count(lit(1)).as("n")),
+      minhashDedup(spark, dir).agg(count(lit(1)).as("n")),
       ("n_near_dup_pairs", col("n"), nullD))
     val contam = melt("dedup",
-      m("decontaminate")(decontaminate(spark, dir)).agg(count(lit(1)).as("n")),
+      decontaminate(spark, dir).agg(count(lit(1)).as("n")),
       ("n_contaminated_docs", col("n"), nullD))
     // AUDIT section — cluster-structure health (scaladoc: exactness per
     // row). ONE persisted knn substrate feeds BOTH graph audits: the
     // modularity decomposition and the edge-recall grade (the
     // labelPropParts sharing device lifted one composition level — built
     // separately, the graph's in-cell topk chain executes twice here)
-    val (knnShared, labsShared) = labelPropPartsMemo(spark, dir)
+    val (knnShared, labsShared) = labelPropParts(spark, dir)
     // Q in ONE aggregation pass: Σ(4m·e_in − d_sum²) = 2·Σd_sum·Σe_in −
     // Σd_sum² with m = Σd_sum/2 (even — every edge contributes two
     // endpoint degrees), so the composed decomposition is evaluated ONCE
@@ -4186,17 +4099,17 @@ object ExtQueries {
         qn.cast("double")
           / (col("sd").cast("double") * col("sd").cast("double"))))
     val audSilhouette = melt("audit",
-      m("silhouette")(silhouette(spark, dir)).agg(count(lit(1)).as("n"),
+      silhouette(spark, dir).agg(count(lit(1)).as("n"),
         sum(floor(col("s") * lit(1000000.0)).cast("long")).as("sfp")),
       ("silhouette_mean", col("sfp"),
         col("sfp").cast("double") / (col("n").cast("double") * lit(1000000.0))))
     val audRecall = melt("audit",
-      m("graph_recall")(graphRecallFromGraph(spark, dir, knnShared)).agg(
+      graphRecallFromGraph(spark, dir, knnShared).agg(
         sum(col("n_hit")).as("nh"), sum(col("n_true")).as("nt")),
       ("knn_edge_recall", col("nh"),
         col("nh").cast("double") / col("nt").cast("double")))
     val audEce = melt("audit",
-      m("calibration")(calibration(spark, dir)).agg(sum(col("n_docs")).as("n"),
+      calibration(spark, dir).agg(sum(col("n_docs")).as("n"),
         sum(abs(col("n_correct") * lit(1000000L) - col("sum_conf_fp")))
           .as("ece_fp")),
       ("calibration_ece", col("ece_fp"),
@@ -4312,7 +4225,7 @@ object ExtQueries {
     * already did the heavy work); the sweep is a |thresholds|-way broadcast
     * cross join over it and two map-side-combined aggregates. */
   def dedupSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = benchMemo(spark, dir, "mh_pairs")(minhashDedup(spark, dir))
+    val pairs = minhashDedup(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val thr = spark.range(SweepThresholds.size)
@@ -4945,15 +4858,6 @@ object ExtQueries {
   def bigramLm(spark: SparkSession, dir: String): DataFrame =
     bigramLmBody(spark, dir).orderBy("doc_id")
 
-  /** [[bigramLmBody]] through the bench memo (round 18): the scored frame
-    * is the substrate of THREE harness keys ([[prefPairs]], [[lmBuckets]]
-    * — and through it [[curriculumOrder]] — and [[importanceSample]]),
-    * each of which re-ran the whole two-pass LM derivation. The graded
-    * operator `e_bigram_lm` itself still executes its full chain (the
-    * `pca_v` pattern); Verify/tests never set the memo property. */
-  private def bigramScoredMemo(spark: SparkSession, dir: String): DataFrame =
-    benchMemo(spark, dir, "bigram_scored")(bigramLmBody(spark, dir))
-
   /** The unordered [[bigramLm]] frame — shared with [[importanceSample]]
     * (the [[pqServe]] single-definition device, so the sampler and the
     * graded score can never drift). */
@@ -5017,7 +4921,7 @@ object ExtQueries {
     * [[bigramLm]] derivation — a harness key (oracle composes its SQL
     * text). */
   def prefPairs(spark: SparkSession, dir: String): DataFrame = {
-    val scored = bigramScoredMemo(spark, dir)
+    val scored = bigramLmBody(spark, dir)
       .filter(col("n_bigrams") > 0)
       .join(table(spark, dir, "documents").select(col("doc_id"), col("source")),
         Seq("doc_id"))
@@ -5058,7 +4962,7 @@ object ExtQueries {
     * per row. The scored frame persists: thresholds and assignment both
     * consume it. */
   def lmBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = bigramScoredMemo(spark, dir)
+    val scored = bigramLmBody(spark, dir)
       .join(table(spark, dir, "documents").select(col("doc_id"), col("lang")),
         Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("p_fp"))
@@ -5159,7 +5063,7 @@ object ExtQueries {
   def importanceSample(spark: SparkSession, dir: String): DataFrame = {
     // persisted: the max aggregate AND the acceptance filter both consume
     // the scored frame — unpersisted, the whole LM derivation runs twice
-    val scored = bigramScoredMemo(spark, dir)
+    val scored = bigramLmBody(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mx = scored.agg(max(col("p_fp")).as("m"))
     val u = pmod(hash64(concat(lit("imp:"), col("doc_id").cast("string"))),
@@ -5560,12 +5464,8 @@ object ExtQueries {
     val batchAssigned = knnAssign(batch, cents)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the standing graph, recomputed here via the shared derivation (a
-    // stored table in production — the composition convention; under the
-    // bench memo it reads the materialized e_knn_graph adjacency, which is
-    // exactly the stored-table serving shape)
-    knnAttach(corpusAssigned,
-        benchMemo(spark, dir, "knn_adjacency")(knnAdjacency(corpusAssigned)),
-        batchAssigned)
+    // stored table in production — the composition convention)
+    knnAttach(corpusAssigned, knnAdjacency(corpusAssigned), batchAssigned)
       .orderBy("src", "rank")
   }
 
@@ -5647,7 +5547,7 @@ object ExtQueries {
     * loop/storage discipline and its ScalaCheck laws live there.
     * Composes the graded [[knnGraph]] derivation — a harness key. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
-    val adj = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
+    val adj = knnGraph(spark, dir)
       .select(col("src"), col("nbr"))
     val mut = adj
       .join(adj.select(col("nbr").as("src"), col("src").as("nbr")),
@@ -5762,15 +5662,6 @@ object ExtQueries {
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val knn = knnGraph(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (knn, labelsFromGraph(spark, dir, knn))
-  }
-
-  /** The propagation half of [[labelPropParts]] over an ALREADY-BUILT knn
-    * edge frame — factored so the bench memo can derive the label frame
-    * from the memoized adjacency instead of rebuilding the whole graph
-    * when only the labels are cold. */
-  private def labelsFromGraph(spark: SparkSession, dir: String,
-      knn: DataFrame): DataFrame = {
     val kd = knn.select(col("src"), col("nbr").as("dst"))
     val edges = kd
       .unionByName(kd.select(col("dst").as("src"), col("src").as("dst")))
@@ -5779,9 +5670,9 @@ object ExtQueries {
     val nodes = emb.select(col("vec_id").as("id"))
     val seeds = emb.filter(col("vec_id") < LabelSeedMax)
       .select(col("vec_id").as("id"), col("label"))
-    graft.operators.LabelPropagation
+    (knn, graft.operators.LabelPropagation
       .propagate(edges, seeds, nodes, LabelPropIters)
-      .select(col("id").as("vec_id"), col("label"), col("is_seed"))
+      .select(col("id").as("vec_id"), col("label"), col("is_seed")))
   }
 
   // ---- e_cosine_topk_beam -------------------------------------------------
@@ -5836,7 +5727,7 @@ object ExtQueries {
     // PERSISTED: the adjacency is probed once per round — unpersisted, the
     // whole knn-graph pipeline would re-execute per round (the dedup-eval
     // lesson). Slim: |corpus|·KnnK id pairs.
-    val adj = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
+    val adj = knnGraph(spark, dir)
       .select(col("src"), col("nbr")).persist()
     // PERSISTED: the corpus side of every per-round scoring join —
     // unpersisted, each round re-reads the parquet scan and recomputes
@@ -5898,7 +5789,9 @@ object ExtQueries {
     * subvectors of [[PqSubDim]] dims, each encoded as one of [[PqCodes]]
     * codebook entries — 4 × 3 bits ≈ 2 bytes per vector instead of 256. */
   private[queries] val PqDim = 64
-  private[queries] val PqSubspaces = 4
+  /** `final`: a constant, so [[AnnCostBytesPq]], defined earlier in this
+    * object, reads 4 and not the uninitialized 0. */
+  private[queries] final val PqSubspaces = 4
   private[queries] val PqSubDim: Int = PqDim / PqSubspaces
   private[queries] val PqCodes = 8
 
@@ -7713,7 +7606,7 @@ object ExtQueries {
     * its SQL text, so the matrix cannot drift from the predictions it
     * summarizes). |langs|² bounded rows; one aggregate. */
   def nbEval(spark: SparkSession, dir: String): DataFrame =
-    benchMemo(spark, dir, "nb_preds")(nbClassify(spark, dir))
+    nbClassify(spark, dir)
       .groupBy(col("lang"), col("pred"))
       .agg(count(lit(1)).as("n"))
       .orderBy("lang", "pred")
@@ -7748,7 +7641,7 @@ object ExtQueries {
     * classifier's own cost profile. */
   def calibration(spark: SparkSession, dir: String): DataFrame = {
     val b = CalibrationBuckets
-    benchMemo(spark, dir, "nb_preds")(nbClassify(spark, dir))
+    nbClassify(spark, dir)
       .select(col("correct"),
         least(expr(s"(n_win * $b) div n_votes"), lit(b - 1)).as("bucket"),
         expr("(n_win * 1000000) div n_votes").as("conf_fp"))
@@ -7802,7 +7695,7 @@ object ExtQueries {
     // MATERIALIZED `preds` CTE (the vacuumPlan/serveDrift dual-consumer
     // discipline). CACHING CONTRACT: callers clearCache() after
     // materializing.
-    val preds = benchMemo(spark, dir, "nb_preds")(nbClassify(spark, dir))
+    val preds = nbClassify(spark, dir)
       .select(col("correct"), col("n_win"), col("n_votes"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val thr = spark.range(0L, NbThresholdSteps).select(col("id").as("t"))
@@ -7896,10 +7789,8 @@ object ExtQueries {
     // the minhash family is graded THROUGH the same materialized shingle
     // frame the truth set uses — one shingling pass, and structurally the
     // same sets (a second derivation could silently drift)
-    metrics("minhash",
-        benchMemo(spark, dir, "mh_pairs")(minhashVerifiedPairsFrom(shd)))
-      .unionAll(metrics("simhash",
-        benchMemo(spark, dir, "sh_pairs")(simhashDedup(spark, dir))))
+    metrics("minhash", minhashVerifiedPairsFrom(shd))
+      .unionAll(metrics("simhash", simhashDedup(spark, dir)))
       .select(col("family"), col("n_truth"), col("n_pred"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_truth").cast("double"))
           .as("recall"),
@@ -8307,7 +8198,7 @@ object ExtQueries {
     * webs (there you count on the degree-ordered orientation for the same
     * bound). The oracle composes the graded `e_knn_graph` SQL text. */
   def triangles(spark: SparkSession, dir: String): DataFrame = {
-    val knn = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
+    val knn = knnGraph(spark, dir)
       .select(col("src"), col("nbr"))
     val und = knn
       .unionByName(knn.select(col("nbr").as("src"), col("src").as("nbr")))
@@ -9362,9 +9253,9 @@ object ExtQueries {
     * is a distributed TakeOrdered with a pinned (|proj| DESC, vec_id ASC)
     * tie-break — no global sort, no window. */
   def pcaProject(spark: SparkSession, dir: String): DataFrame = {
-    // under the bench memo the trained eigenvector is the stored artifact
-    // of the graded e_pca_power chain — one 1-row frame
-    val vFinal = benchMemo(spark, dir, "pca_v")(pcaParts(spark, dir)._2)
+    // the trained eigenvector of the graded e_pca_power chain — one 1-row
+    // frame
+    val vFinal = pcaParts(spark, dir)._2
     table(spark, dir, "embeddings").select(col("vec_id"), col("embedding").as("e"))
       .crossJoin(broadcast(vFinal.select(col("varr"))))
       .select(col("vec_id"),
@@ -9402,7 +9293,7 @@ object ExtQueries {
     * bounded frontiers. Composes the graded `e_knn_graph` (its oracle SQL
     * text likewise) — a harness-key by the attribution rule. */
   def randWalk(spark: SparkSession, dir: String): DataFrame = {
-    val edges = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
+    val edges = knnGraph(spark, dir)
       .select(col("src"), col("nbr"), col("rank"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = edges.groupBy(col("src")).agg(max(col("rank")).as("deg"))
@@ -9452,8 +9343,7 @@ object ExtQueries {
     * graded [[knnGraph]] (oracle SQL text likewise) — a harness-key by
     * the attribution rule. */
   def graphRecall(spark: SparkSession, dir: String): DataFrame =
-    benchMemo(spark, dir, "graph_recall")(graphRecallFromGraph(spark, dir,
-      benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))))
+    graphRecallFromGraph(spark, dir, knnGraph(spark, dir))
 
   /** [[graphRecall]]'s body over an ALREADY-BUILT knn edge frame — the
     * [[modularityFromParts]] sibling, so [[datasheet]] grades the SAME
@@ -9590,7 +9480,7 @@ object ExtQueries {
     // canonical edge list (labelPropParts's contract) — calling the
     // ordered labelProp surface here would build the graph twice and pay
     // an output sort the aggregate below immediately destroys
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
+    val (knn, labs) = labelPropParts(spark, dir)
     modularityFromParts(knn, labs).orderBy("label")
   }
 
@@ -9663,14 +9553,13 @@ object ExtQueries {
     * Composes the graded [[labelProp]] and [[knnGraph]] derivations — a
     * harness key. */
   def louvainMove(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
+    val (knn, labs) = labelPropParts(spark, dir)
     louvainMovesFrom(knn, labs).orderBy("vec_id")
   }
 
   /** [[louvainMove]]'s body without the output sort — the frame
     * [[louvainApply]]/[[louvainCollapse]] consume (the changeFeedRows
-    * factoring rule), memoized under bench as `louvain_moves` so the
-    * downstream keys pay only their marginal work. */
+    * factoring rule). */
   private[queries] def louvainMovesFrom(
       knn: DataFrame, labs: DataFrame): DataFrame = {
     val lp = labs.filter(col("label").isNotNull)
@@ -9773,9 +9662,8 @@ object ExtQueries {
     * [[louvainMove]]/[[labelProp]]/[[knnGraph]] derivations — a harness
     * key. */
   def louvainApply(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
-    val moves = benchMemo(spark, dir, "louvain_moves")(
-      louvainMovesFrom(knn, labs))
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
     val picked = louvainPicked(moves)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val before = modularityFromParts(knn, labs)
@@ -9786,14 +9674,11 @@ object ExtQueries {
     // (round 17, guide §2.4): by the spec-pinned mass-conservation
     // theorem [[louvainDecompFromCondensed]](cg, sizes) IS
     // modularityFromParts(knn, nl) — the corpus-side second pass this
-    // body previously paid is gone (and under the bench memo, nl and cg
-    // are the family's shared stored substrates). Eager localCheckpoints
+    // body previously paid is gone. Eager localCheckpoints
     // per the [[louvainMerge]] discipline: the nl→cg chain stacked on
     // the before-decomposition's plan is otherwise Catalyst-pathological.
-    val nl = pinUnlessMemo(benchMemo(spark, dir, "louvain_nl")(
-      louvainNewLabs(labs, picked)))
-    val cg = pinUnlessMemo(benchMemo(spark, dir, "louvain_cg")(
-      louvainCollapseFrom(knn, nl)))
+    val nl = louvainNewLabs(labs, picked).localCheckpoint(true)
+    val cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
     val sizes = nl.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
     val after = louvainDecompFromCondensed(cg, sizes)
@@ -9851,15 +9736,9 @@ object ExtQueries {
     * factoring rule). */
   private[queries] def louvainCollapseRows(
       spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
-    val moves = benchMemo(spark, dir, "louvain_moves")(
-      louvainMovesFrom(knn, labs))
-    // louvain_nl joins the memo family (round 17): the post-move label
-    // frame is the shared substrate of five harness keys
-    // (apply/collapse/super/merge/levels) — under bench it materializes
-    // once and each key pays its own marginal work
-    val nl = benchMemo(spark, dir, "louvain_nl")(
-      louvainNewLabs(labs, louvainPicked(moves)))
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
+    val nl = louvainNewLabs(labs, louvainPicked(moves))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     louvainCollapseFrom(knn, nl)
   }
@@ -9917,10 +9796,8 @@ object ExtQueries {
   private[queries] def louvainSuperRows(
       spark: SparkSession, dir: String): DataFrame = {
     // |communities|²-row condensed table, persisted for its three
-    // consumers (mass, degrees, pairs); louvain_cg memoized under bench
-    // (round 17 — super/merge/levels share the level-0 condensation)
-    val cg = benchMemo(spark, dir, "louvain_cg")(
-      louvainCollapseRows(spark, dir))
+    // consumers (mass, degrees, pairs)
+    val cg = louvainCollapseRows(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     louvainSuperFrom(cg)
   }
@@ -9998,21 +9875,16 @@ object ExtQueries {
     // ONE substrate chain for everything below (the louvainCollapseFrom
     // sharing contract): graph + post-move labels build once, the
     // condensed table derives from them, the sweep from it
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
-    val moves = benchMemo(spark, dir, "louvain_moves")(
-      louvainMovesFrom(knn, labs))
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
     // EAGER localCheckpoint, not persist: this key stacks the sweep, the
     // condensation, the weighted sweep AND two decompositions on one
     // lineage — left lazy, the composed Catalyst plan is pathological
     // (heap-exhausted analysis, the IterStorage scaladoc's trap;
     // measured). nl/cg are slim (|V| and ≤|communities|² rows); Verify's
-    // RDD sweep releases the blocks after the key materializes. Both ride
-    // the round-17 memo family under bench (cold thunks build from the
-    // checkpointed predecessor exactly as before).
-    val nl = pinUnlessMemo(benchMemo(spark, dir, "louvain_nl")(
-      louvainNewLabs(labs, louvainPicked(moves))))
-    val cg = pinUnlessMemo(benchMemo(spark, dir, "louvain_cg")(
-      louvainCollapseFrom(knn, nl)))
+    // RDD sweep releases the blocks after the key materializes.
+    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
+    val cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
     val sup = louvainSuperFrom(cg).filter(col("merged"))
       .select(col("community"), col("partner"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -10027,8 +9899,7 @@ object ExtQueries {
     // counts either way). The previous body re-ran the |E|-row
     // [[modularityFromParts]] corpus decomposition per side (2 passes +
     // 2 persists per measured run); both sides now cost ≤|communities|²
-    // metadata rows plus ONE |V|-row size count (measured: 4.1 → 1.3 s
-    // marginal under the bench memo).
+    // metadata rows plus ONE |V|-row size count.
     val sizes = nl.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -10071,24 +9942,6 @@ object ExtQueries {
     * tail of the contraction — deep enough that the hierarchy is real,
     * shallow enough that the oracle's unrolled CTE chain stays tractable. */
   private[queries] val LouvainLevels = 2
-
-  /** Eager lineage pin for a memo-backed substrate (round 17): under the
-    * bench memo the frame IS a parquet scan — lineage is one file read,
-    * so an eager localCheckpoint job per measured pass is pure overhead
-    * (measured 0.2–0.4 s per pin on the Louvain keys). Otherwise (Verify,
-    * tests, library callers) the checkpoint is load-bearing: it truncates
-    * the Catalyst-pathological composed chain (the [[louvainMerge]] lesson
-    * — heap-exhausted analysis when the stacked sweep/condense plans are
-    * left lazy). Round 18 (advisor): the decision reads the FRAME, not the
-    * global [[graft.BenchMemo]] scope — the pin is skipped only when the
-    * frame actually IS a bare file-scan relation, so a caller that happens
-    * to run inside a memo scope can never silently lose the load-bearing
-    * checkpoint on an unmemoized lineage. */
-  private def pinUnlessMemo(df: DataFrame): DataFrame = {
-    val isFileScan = df.queryExecution.analyzed.isInstanceOf[
-      org.apache.spark.sql.execution.datasources.LogicalRelation]
-    if (isFileScan) df else df.localCheckpoint(true)
-  }
 
   /** Mutual-best pairs (c_lo < c_hi) of a weighted sweep's merge table —
     * the matching device shared by [[louvainMerge]] and
@@ -10198,13 +10051,10 @@ object ExtQueries {
     * never a corpus pass. Composes the graded [[louvainSuper]] chain —
     * a harness key. */
   def louvainLevels(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
-    val moves = benchMemo(spark, dir, "louvain_moves")(
-      louvainMovesFrom(knn, labs))
-    val nl = pinUnlessMemo(benchMemo(spark, dir, "louvain_nl")(
-      louvainNewLabs(labs, louvainPicked(moves))))
-    var cg = pinUnlessMemo(benchMemo(spark, dir, "louvain_cg")(
-      louvainCollapseFrom(knn, nl)))
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
+    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
+    var cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
     var sizes = nl.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes")).localCheckpoint(true)
     var out = louvainLevelReport(0, cg, sizes)
@@ -10254,13 +10104,10 @@ object ExtQueries {
     * the metadata condensed graph exactly as in [[louvainLevels]].
     * Composes the graded [[louvainSuper]] chain — a harness key. */
   def louvainAssign(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropPartsMemo(spark, dir)
-    val moves = benchMemo(spark, dir, "louvain_moves")(
-      louvainMovesFrom(knn, labs))
-    val nl = pinUnlessMemo(benchMemo(spark, dir, "louvain_nl")(
-      louvainNewLabs(labs, louvainPicked(moves))))
-    var cg = pinUnlessMemo(benchMemo(spark, dir, "louvain_cg")(
-      louvainCollapseFrom(knn, nl)))
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
+    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
+    var cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
     var asg = nl.select(col("vec_id"), col("label").as("label0"),
       col("label").as("community"))
     for (l <- 1 to LouvainLevels) {
@@ -10306,7 +10153,7 @@ object ExtQueries {
     * [[randWalk]] (its oracle SQL text likewise) — a harness-key by the
     * attribution rule. */
   def walkPairs(spark: SparkSession, dir: String): DataFrame = {
-    val walks = benchMemo(spark, dir, "rand_walk")(randWalk(spark, dir))
+    val walks = randWalk(spark, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     walks.as("x").join(walks.as("y"),
         col("x.walk_id") === col("y.walk_id") &&
@@ -10579,7 +10426,7 @@ object ExtQueries {
     * [[HitsIters]] rounds as chained CTEs. Composes [[knnGraph]] — a
     * harness-key by the attribution rule. */
   def hits(spark: SparkSession, dir: String): DataFrame = {
-    val edges = benchMemo(spark, dir, "knn_adjacency")(knnGraph(spark, dir))
+    val edges = knnGraph(spark, dir)
       .select(col("src"), col("nbr").as("dst"))
     val nodes = table(spark, dir, "embeddings").select(col("vec_id").as("id"))
     graft.operators.Hits.scores(edges, nodes, HitsIters)
@@ -10708,7 +10555,7 @@ object ExtQueries {
     * that appear in some pair (a semi-join cut). Composes [[frameDedup]]
     * — a harness key by the attribution rule. */
   def frameAlign(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = benchMemo(spark, dir, "frame_pairs")(frameDedup(spark, dir))
+    val pairs = frameDedup(spark, dir)
       .select(col("doc_a"), col("doc_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seqs = frameHashSeqs(frameUniverse(spark, dir))
@@ -11931,13 +11778,12 @@ object ExtQueries {
     * apply); the union is by name over three slim 3-column frames.
     * Composes three graded operators — a harness key. */
   def dedupLineage(spark: SparkSession, dir: String): DataFrame = {
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
     def fam(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("family"), col("doc_b").as("doc_id"),
         col("doc_a").as("cand"))
-    fam("minhash", m("mh_pairs")(minhashDedup(spark, dir)))
-      .unionByName(fam("simhash", m("sh_pairs")(simhashDedup(spark, dir))))
-      .unionByName(fam("media", m("media_pairs")(mediaDedup(spark, dir))))
+    fam("minhash", minhashDedup(spark, dir))
+      .unionByName(fam("simhash", simhashDedup(spark, dir)))
+      .unionByName(fam("media", mediaDedup(spark, dir)))
       .groupBy(col("family"), col("doc_id"))
       .agg(min(col("cand")).as("kept_id"))
       .orderBy("family", "doc_id")
@@ -11986,15 +11832,14 @@ object ExtQueries {
           (col("n_refs").cast("double") / col("n_rows").cast("double"))
             .as("ref_share"))
     }
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
     audit("chunk_dedup",
-        m("chunk_dedup")(chunkDedup(spark, dir)).select(baseId.as("bid")))
+        chunkDedup(spark, dir).select(baseId.as("bid")))
       .unionByName(audit("dup_clusters",
-        m("dup_clusters")(dupClusters(spark, dir)).select(baseId.as("bid"))))
+        dupClusters(spark, dir).select(baseId.as("bid"))))
       .unionByName(audit("fingerprint",
-        m("fingerprint")(fingerprint(spark, dir)).select(baseId.as("bid"))))
+        fingerprint(spark, dir).select(baseId.as("bid"))))
       .unionByName(audit("split",
-        m("corpus_split")(corpusSplit(spark, dir)).select(baseId.as("bid"))))
+        corpusSplit(spark, dir).select(baseId.as("bid"))))
       .orderBy("artifact")
   }
 
@@ -12060,10 +11905,9 @@ object ExtQueries {
       report(name, ids,
         ids.join(broadcast(dels), ids("bid") === dels("del_id"), "left_anti"))
     }
-    def m(name: String)(df: => DataFrame) = benchMemo(spark, dir, name)(df)
     // cluster cascade: drop members, re-count, dissolve sub-2 clusters.
     // PERSISTED: the kept frame feeds the re-count AND the survivor join.
-    val clus = m("dup_clusters")(dupClusters(spark, dir))
+    val clus = dupClusters(spark, dir)
       .select(baseId.as("bid"), col("cluster_id"))
     val kept = clus.join(broadcast(dels), clus("bid") === dels("del_id"),
         "left_anti")
@@ -12073,10 +11917,10 @@ object ExtQueries {
       .filter(col("sz") >= 2)
     val clusAfter = kept.join(broadcast(resized.select(col("cluster_id"))),
       Seq("cluster_id"), "left_semi")
-    perDoc("chunk_dedup", m("chunk_dedup")(chunkDedup(spark, dir)))
+    perDoc("chunk_dedup", chunkDedup(spark, dir))
       .unionByName(report("dup_clusters", clus, clusAfter))
-      .unionByName(perDoc("fingerprint", m("fingerprint")(fingerprint(spark, dir))))
-      .unionByName(perDoc("split", m("corpus_split")(corpusSplit(spark, dir))))
+      .unionByName(perDoc("fingerprint", fingerprint(spark, dir)))
+      .unionByName(perDoc("split", corpusSplit(spark, dir)))
       .orderBy("artifact")
   }
 
@@ -12147,23 +11991,13 @@ object ExtQueries {
         assigned("vec_id") === dels("del_id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // PERSISTED: feeds the before-count, the touched-node scan and the
-    // untouched-edge carry-over (under the bench memo the standing
-    // adjacency reads the materialized e_knn_graph list — the stored-table
-    // shape of production)
-    val oldEdges = benchMemo(spark, dir, "knn_adjacency")(
-        knnTopk(knnScoredPairs(assigned, assigned)))
+    // untouched-edge carry-over
+    val oldEdges = knnTopk(knnScoredPairs(assigned, assigned))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // PERSISTED: feeds the after-count, the endpoint refs scan and the
-    // digest. Under the bench memo (default request rule only) the
-    // repaired artifact is shared with [[indexRetrain]]'s before-side as
-    // "knn_surv" — the repair≡rebuild theorem this key's own oracle
-    // certifies is what makes the two frames the same artifact. The
-    // repair body is the shared [[knnRepairEdges]] (one definition with
-    // the streaming delete-aware gate).
-    val newEdgesRaw = knnRepairEdges(assignedAfter, oldEdges, dels)
-    val newEdges = (if (mod == DeleteEveryMod)
-        benchMemo(spark, dir, "knn_surv")(newEdgesRaw)
-      else newEdgesRaw)
+    // digest. The repair body is the shared [[knnRepairEdges]] (one
+    // definition with the streaming delete-aware gate).
+    val newEdges = knnRepairEdges(assignedAfter, oldEdges, dels)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     def summary(name: String, before: DataFrame, after: DataFrame,
@@ -12264,9 +12098,8 @@ object ExtQueries {
     val assignedAfter = assignOf(trained).persist(StorageLevel.MEMORY_AND_DISK)
     // the post-delete standing adjacency ≡ rebuild over survivors (the
     // indexDelete repair≡rebuild theorem — its oracle certifies this very
-    // frame); under the bench memo both sides are shared artifacts
-    val knnBefore = benchMemo(spark, dir, "knn_surv")(
-      knnAdjacency(assignedBefore))
+    // frame)
+    val knnBefore = knnAdjacency(assignedBefore)
     val knnAfter = knnAdjacency(assignedAfter)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seedList = ivfServeAssigned(assignedBefore)

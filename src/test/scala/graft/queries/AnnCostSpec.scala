@@ -80,7 +80,9 @@ class AnnCostSpec extends AnyFunSuite {
 
     val all = nQ * (n - 1)
     val full = ExtQueries.AnnCostBytesFull
-    val (bSq, bPq) = (ExtQueries.AnnCostBytesSq, ExtQueries.AnnCostBytesPq)
+    // one byte-sized code id per subspace, from the PQ geometry itself: the
+    // cost constant must not be its own expectation
+    val (bSq, bPq) = (ExtQueries.AnnCostBytesSq, ExtQueries.PqSubspaces.toLong)
     val sqrFull = nQ * math.min(ExtQueries.SqRerankR.toLong, n - 1)
     val want = Map(
       "exact" -> ((0L, 0L, all, tExact)),
