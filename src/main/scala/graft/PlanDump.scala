@@ -14,7 +14,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * builds the same frame Bench and Verify build. Explain itself is
   * driver-side, but CONSTRUCTING some frames runs jobs: the Louvain keys
   * eagerly localCheckpoint their substrates, so a dump executes those pin
-  * jobs.
+  * jobs. Each key's persisted and checkpointed frames are released
+  * ([[GraftSession.release]]) before the next key builds, as in [[Bench]]
+  * and [[Verify]], so a key's plan does not depend on the keys dumped
+  * before it.
   * AQE nodes show the initial plan — the Exchange/join-strategy shape the
   * optimizer chose, which is what the plan pins assert about. */
 object PlanDump {
@@ -37,6 +40,7 @@ object PlanDump {
         .findAllMatchIn(plan).map(_.group(1)).toSet.size
       println(s"$name: ${plan.linesIterator.size} lines, ~$exchanges Exchange mentions, " +
         s"$scans parquet scans -> $p")
+      GraftSession.release(spark)
     }
     spark.stop()
   }

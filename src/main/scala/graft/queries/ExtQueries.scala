@@ -1226,34 +1226,49 @@ object ExtQueries {
     * same bound forces a SortAggregate that SORTS the full collision
     * stream (measured 2.3× slower on this stage).
     *
-    * VERIFY: `bs` is array_sort'ed ONCE at materialization so the per-pair
-    * counter is [[graft.functions.SetOps.intersectCountSorted]] — a linear
-    * two-pointer merge with no per-pair scratch buffer or sort (2.4×
-    * faster than the general kernel on the 5.8M-pair verify at sf0.1,
-    * where each set is probed thousands of times).
+    * VERIFY: `bs` is sorted ONCE at materialization (`sort_array`, which
+    * codegens; `bs` is distinct and has no null element but the lone one
+    * of a null-text document, so any ascending sort gives this order) and
+    * the per-pair counter is [[graft.functions.SetOps.intersectCountSorted]]
+    * — a linear two-pointer merge with no per-pair scratch buffer or sort
+    * (2.4× faster than the general kernel on the 5.8M-pair verify at
+    * sf0.1, where each set is probed thousands of times). Both verify
+    * sides join the SAME `(doc_id, bs)` frame, so their broadcasts are one
+    * reused exchange, and the filter is 3·|∩| ≥ |A| + |B| (the same
+    * integers as 2·|∩| ≥ |∪|): Catalyst pushes it into the join condition,
+    * where it calls the kernel once per candidate (the |∪| form names
+    * |∩| twice and calls it twice).
     *
-    * Shuffles: one df aggregate, one per-doc prefix window (bounded by
-    * document length), the prefix equi-join (the PERSISTED prefix frame —
-    * both join sides probe it; unpersisted, the whole df+window chain
-    * executes twice), the per-pair collision aggregate, and the verify
-    * join back to `sets`.
+    * Shuffles: one df aggregate, one per-doc prefix repartition (one
+    * partition per core, so AQE cannot fold the quadratic self-join into
+    * one task on a small corpus; the window reuses it), the per-pair
+    * collision aggregate, and the output's single-partition exchange. The
+    * output is sorted inside that one partition because a global `orderBy`
+    * over the un-shuffled verify stage makes the range partitioner sample
+    * that stage in an extra job, running the self-join, the pair
+    * aggregate and the verify twice. The output is |verified pairs| rows,
+    * a small fraction of the candidates.
     *
-    * CACHING CONTRACT: `sets` (probed by the postings path and both verify
-    * sides) and `prefix` (both sides of the candidate self-join) persist;
-    * callers clearCache() after materializing — the Bench/Verify teardown
-    * (the file-default contract, stated here because two frames persist). */
+    * CACHING CONTRACT: `sets` (read by the postings path and the verify)
+    * and `prefix` (both sides of the candidate self-join) are EAGER
+    * `localCheckpoint`s, each computed by exactly one job (AQE
+    * materializes a not-yet-cached persisted frame once per plan branch
+    * that reads it, in concurrent jobs), and their reads need no
+    * generated columnar-cache accessors. `spark.catalog.clearCache()` does not release them; the
+    * Bench/Verify teardown's RDD sweep ([[graft.GraftSession.release]])
+    * or [[graft.operators.IterStorage.release]] on the output does. */
   def jaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
     val (sets, _, prefix) = jaccardPrefixIndex(spark, dir)
-    jaccardPrefixCandidates(prefix).select(col("doc_a"), col("doc_b"))
-      .join(sets.select(col("doc_id").as("doc_a"), col("bs").as("bs_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("bs").as("bs_b")), Seq("doc_b"))
-      .withColumn("n_inter",
-        graft.functions.GraftFunctions.intersectCountSorted(col("bs_a"), col("bs_b")))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (size(col("bs_a")).cast("long") + size(col("bs_b")).cast("long")
-          - col("n_inter")).as("n_union"))
-      .filter(lit(2) * col("n_inter") >= col("n_union"))
-      .orderBy("doc_a", "doc_b")
+    val (bsA, bsB) = (col("a.bs"), col("b.bs"))
+    val nInter = graft.functions.GraftFunctions.intersectCountSorted(bsA, bsB)
+    val nAB = size(bsA).cast("long") + size(bsB).cast("long")
+    jaccardPrefixCandidates(prefix)
+      .join(sets.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(sets.as("b"), col("doc_b") === col("b.doc_id"))
+      .filter(lit(3) * nInter >= nAB)
+      .select(col("doc_a"), col("doc_b"), nInter.as("n_inter"), (nAB - nInter).as("n_union"))
+      .repartition(1)
+      .sortWithinPartitions("doc_a", "doc_b")
   }
 
   /** [[jaccardPrefix]]'s candidate-pair counts at each pruning stage —
@@ -1267,28 +1282,33 @@ object ExtQueries {
       .join(p.as("y"), col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id"), col("y.doc_id")).distinct().count()
     val res = (jaccardPrefixCandidates(prefix).count(), pairs(prefix), pairs(postings))
-    prefix.unpersist()
-    sets.unpersist()
+    graft.operators.IterStorage.release(prefix)
+    graft.operators.IterStorage.release(sets)
     res
   }
 
-  /** [[jaccardPrefix]]'s index — (`sets` with `bs` array_sort'ed, its
-    * bigram `postings`, the (df, g)-ranked `prefix` postings), `sets` and
-    * `prefix` persisted — derived in one place for the key and
+  /** [[jaccardPrefix]]'s index — (`sets` with `bs` sorted, its bigram
+    * `postings`, the (df, g)-ranked `prefix` postings), `sets` and
+    * `prefix` eagerly checkpointed — derived in one place for the key and
     * [[jaccardPrefixCandidateCounts]], so the pruning the spec measures is
     * the key's own. */
   private def jaccardPrefixIndex(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
+    // each frame holds exactly the columns its readers take, so no read
+    // of a checkpoint needs a pruning projection
     val sets = bigramSetsKeeping(docsWithVariants(spark, dir), Nil)
-      .withColumn("bs", array_sort(col("bs")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val postings = sets.select(col("doc_id"), col("nb"), explode(col("bs")).as("g"))
+      .select(col("doc_id"), sort_array(col("bs")).as("bs"))
+      .localCheckpoint(true)
+    val postings = sets.select(col("doc_id"), size(col("bs")).as("nb"),
+      explode(col("bs")).as("g"))
     val dfreq = postings.groupBy(col("g")).agg(count(lit(1)).as("df"))
     val prefix = postings.join(dfreq, Seq("g"))
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)))
       .filter(col("rn") <= col("nb") - expr("(nb + 1) div 2") + 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("g"), col("doc_id"), col("nb"), col("rn"))
+      .localCheckpoint(true)
     (sets, postings, prefix)
   }
 
@@ -1403,7 +1423,10 @@ object ExtQueries {
       .filter(lit(5) * col("n_inter") >= lit(4) * least(col("n_a"), col("n_b")))
       .withColumn("containment",
         col("n_inter").cast("double") / least(col("n_a"), col("n_b")).cast("double"))
-      .orderBy("doc_a", "doc_b")
+      // sorted in one partition, as [[jaccardPrefix]]: a global orderBy
+      // would sample the verify stage in an extra job that re-runs it
+      .repartition(1)
+      .sortWithinPartitions("doc_a", "doc_b")
   }
 
   // ---- e_cosine_dedup -----------------------------------------------------
@@ -2213,7 +2236,7 @@ object ExtQueries {
     * k-means degeneracy, surfaced identically in both engines. */
   private def centsFromUpdate(upd: DataFrame): DataFrame =
     upd.groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("c_fp")))).as("ds"))
+      .agg(sort_array(collect_list(struct(col("dim"), col("c_fp")))).as("ds"))
       .select(col("cell").as("cent_id"),
         transform(col("ds"), s => s.getField("c_fp").cast("double")).as("ce"))
       .withColumn("ncent", l2norm(col("ce")))
@@ -3704,7 +3727,7 @@ object ExtQueries {
       .select(col("vec_id"), col("embedding").as("e"))
       .withColumn("nrm", l2norm(col("e")))
     val benchArr = emb.filter(col("vec_id") < DecontamBenchIds)
-      .agg(array_sort(collect_list(
+      .agg(sort_array(collect_list(
         struct(col("vec_id").as("bid"), col("e").as("be"), col("nrm").as("bn"))))
         .as("bs"))
     val dot = (b: Column) => dotD(col("e"), b)
@@ -5980,7 +6003,7 @@ object ExtQueries {
       codes = upd
         .select(col("sub"), col("code_id"), col("dim"), cNew.as("cnew"))
         .groupBy(col("code_id"), col("sub"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("cnew")))).as("ds"))
+        .agg(sort_array(collect_list(struct(col("dim"), col("cnew")))).as("ds"))
         .select(col("code_id"), col("sub"),
           transform(col("ds"), s => s.getField("cnew")).as("cv"))
       upd.withColumn("iter", lit(it))
@@ -6802,7 +6825,7 @@ object ExtQueries {
     val fused = tagged
       .withColumn("c", lit(1.0) / (lit(RrfK.toDouble) + col("rank").cast("double")))
       .groupBy(col("qid"), col("cid"))
-      .agg(array_sort(collect_list(struct(col("fidx"), col("c")))).as("cs"),
+      .agg(sort_array(collect_list(struct(col("fidx"), col("c")))).as("cs"),
         count(lit(1)).as("n_lists"))
       .withColumn("rrf",
         aggregate(transform(col("cs"), p => p("c")), lit(0.0), (a, x) => a + x))
@@ -7098,7 +7121,7 @@ object ExtQueries {
               (col("n").cast("double") / col("avgdl"))))))
     val scores = contrib
       .groupBy(col("qid"), col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tidx"), col("c")))).as("cs"))
+      .agg(sort_array(collect_list(struct(col("tidx"), col("c")))).as("cs"))
       .withColumn("score",
         aggregate(transform(col("cs"), p => p("c")), lit(0.0), (a, x) => a + x))
     val agg10 = new graft.functions.TopKByScoreAggregator(10)
@@ -7453,7 +7476,7 @@ object ExtQueries {
       .agg(sum(floor(col("v").cast("double") * lit(1048576.0) + 0.5)
         .cast("long")).cast("double").as("s"))
     val cents = comp.groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("s")))).as("pairs"))
+      .agg(sort_array(collect_list(struct(col("dim"), col("s")))).as("pairs"))
       .select(col("label").as("clabel"),
         transform(col("pairs"), p => p("s")).as("ce"))
       .withColumn("ncent", sqrt(seqSum(transform(col("ce"), x => x * x))))
@@ -7464,7 +7487,7 @@ object ExtQueries {
     val ranked = vecs.crossJoin(broadcast(cents))
       .withColumn("score", dot / (col("nrm") * col("ncent")))
       .groupBy(col("vec_id"), col("label"))
-      .agg(array_sort(collect_list(
+      .agg(sort_array(collect_list(
         struct((-col("score")).as("ns"), col("clabel")))).as("r"))
     ranked.select(col("vec_id"), col("label"),
         col("r")(0)("clabel").as("pred_label"),
@@ -9215,11 +9238,11 @@ object ExtQueries {
     // (sequential zip_with folds per row, i-ascending λ fold), so the
     // iterates are bit-identical — oracle-gated.
     val gMat = gFull.groupBy(col("i"))
-      .agg(array_sort(collect_list(struct(col("j"), col("g")))).as("gj"))
+      .agg(sort_array(collect_list(struct(col("j"), col("g")))).as("gj"))
       .select(col("i"),
         transform(col("gj"), s => s.getField("g").cast("double") / lit(PcaScale))
           .as("garr"))
-      .agg(array_sort(collect_list(struct(col("i"), col("garr")))).as("rows"))
+      .agg(sort_array(collect_list(struct(col("i"), col("garr")))).as("rows"))
       .select(transform(col("rows"), r => r.getField("garr")).as("gmat"),
         expr(s"transform(sequence(0, ${d - 1}), x -> CAST(0.125 AS DOUBLE))")
           .as("varr"))  // v₀ = uniform 1/8 (exactly representable; unit-norm at dim 64)
@@ -9729,19 +9752,7 @@ object ExtQueries {
     * [[louvainMove]]/[[labelProp]]/[[knnGraph]] derivations — a harness
     * key. */
   def louvainCollapse(spark: SparkSession, dir: String): DataFrame =
-    louvainCollapseRows(spark, dir).orderBy("c_a", "c_b")
-
-  /** [[louvainCollapse]]'s body without the output sort — the condensed
-    * graph [[louvainSuper]] runs the next sweep on (the changeFeedRows
-    * factoring rule). */
-  private[queries] def louvainCollapseRows(
-      spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropParts(spark, dir)
-    val moves = louvainMovesFrom(knn, labs)
-    val nl = louvainNewLabs(labs, louvainPicked(moves))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    louvainCollapseFrom(knn, nl)
-  }
+    louvainPinned(spark, dir)._2.orderBy("c_a", "c_b")
 
   /** The condensation body over an already-built (knn edges, post-move
     * labels) pair — factored so [[louvainMerge]] shares ONE substrate
@@ -9788,21 +9799,27 @@ object ExtQueries {
     * was paid once in the collapse. Composes the graded
     * [[louvainCollapse]] chain — a harness key. */
   def louvainSuper(spark: SparkSession, dir: String): DataFrame =
-    louvainSuperRows(spark, dir).orderBy("community")
+    louvainSuperFrom(louvainPinned(spark, dir)._2).orderBy("community")
 
-  /** [[louvainSuper]]'s body without the output sort — the merge table
-    * [[louvainMerge]] selects its matching from (the changeFeedRows
-    * factoring rule). */
-  private[queries] def louvainSuperRows(
-      spark: SparkSession, dir: String): DataFrame = {
-    // |communities|²-row condensed table, persisted for its three
-    // consumers (mass, degrees, pairs)
-    val cg = louvainCollapseRows(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    louvainSuperFrom(cg)
+  /** The pinned substrate of one Louvain sweep: the post-move labels `nl`
+    * and the condensed graph `cg` built from them, each an EAGER
+    * `localCheckpoint`, not a persist. Left lazy, the move/label chain
+    * under them re-plans inside every consumer, and a key that stacks the
+    * weighted sweep, the condensation and the decompositions on one
+    * lineage gets a pathological Catalyst plan (heap-exhausted analysis,
+    * the IterStorage scaladoc's trap; measured). `nl` has |V| rows and
+    * `cg` ≤|communities|²; the Bench/Verify RDD sweep releases the blocks
+    * after the key materializes. Shared by [[louvainSuper]],
+    * [[louvainMerge]], [[louvainLevels]] and [[louvainAssign]]. */
+  private def louvainPinned(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val (knn, labs) = labelPropParts(spark, dir)
+    val moves = louvainMovesFrom(knn, labs)
+    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
+    (nl, louvainCollapseFrom(knn, nl).localCheckpoint(true))
   }
 
-  /** The weighted sweep over an already-built (and persisted) condensed
+  /** The weighted sweep over an already-built (and pinned) condensed
     * table — the [[louvainCollapseFrom]] sharing rule applied one level
     * up, for [[louvainMerge]]. */
   private def louvainSuperFrom(cg: DataFrame): DataFrame = {
@@ -9872,19 +9889,10 @@ object ExtQueries {
     * decomposition previously ran twice per call). Composes the graded
     * [[louvainSuper]] chain — a harness key. */
   def louvainMerge(spark: SparkSession, dir: String): DataFrame = {
-    // ONE substrate chain for everything below (the louvainCollapseFrom
+    // ONE pinned substrate for everything below (the louvainCollapseFrom
     // sharing contract): graph + post-move labels build once, the
     // condensed table derives from them, the sweep from it
-    val (knn, labs) = labelPropParts(spark, dir)
-    val moves = louvainMovesFrom(knn, labs)
-    // EAGER localCheckpoint, not persist: this key stacks the sweep, the
-    // condensation, the weighted sweep AND two decompositions on one
-    // lineage — left lazy, the composed Catalyst plan is pathological
-    // (heap-exhausted analysis, the IterStorage scaladoc's trap;
-    // measured). nl/cg are slim (|V| and ≤|communities|² rows); Verify's
-    // RDD sweep releases the blocks after the key materializes.
-    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
-    val cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
+    val (nl, cg) = louvainPinned(spark, dir)
     val sup = louvainSuperFrom(cg).filter(col("merged"))
       .select(col("community"), col("partner"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -10051,10 +10059,8 @@ object ExtQueries {
     * never a corpus pass. Composes the graded [[louvainSuper]] chain —
     * a harness key. */
   def louvainLevels(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropParts(spark, dir)
-    val moves = louvainMovesFrom(knn, labs)
-    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
-    var cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
+    val (nl, cg0) = louvainPinned(spark, dir)
+    var cg = cg0
     var sizes = nl.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes")).localCheckpoint(true)
     var out = louvainLevelReport(0, cg, sizes)
@@ -10104,10 +10110,8 @@ object ExtQueries {
     * the metadata condensed graph exactly as in [[louvainLevels]].
     * Composes the graded [[louvainSuper]] chain — a harness key. */
   def louvainAssign(spark: SparkSession, dir: String): DataFrame = {
-    val (knn, labs) = labelPropParts(spark, dir)
-    val moves = louvainMovesFrom(knn, labs)
-    val nl = louvainNewLabs(labs, louvainPicked(moves)).localCheckpoint(true)
-    var cg = louvainCollapseFrom(knn, nl).localCheckpoint(true)
+    val (nl, cg0) = louvainPinned(spark, dir)
+    var cg = cg0
     var asg = nl.select(col("vec_id"), col("label").as("label0"),
       col("label").as("community"))
     for (l <- 1 to LouvainLevels) {
