@@ -41,43 +41,51 @@ object Bench {
     // dominated by one-time JIT/codegen costs its chunk run never paid
     // (measured: e_zorder 1.03s at warmups=1 vs 0.38s chunked).
     val warmups = sys.env.get("SPARK_GRAFT_WARMUPS").map(_.toInt).getOrElse(1)
+    // A key that throws must not pass silently: a warmup failure is kept
+    // for the JSON line (`warmup_errors`), and one in a MEASURED pass must
+    // not record its time-to-failure as a latency with rc 0 (the
+    // correctness gate catches broken keys, but the bench artifact would
+    // silently carry a bogus number) — it goes to `errors` instead.
+    val warmupErrors = scala.collection.mutable.Map.empty[String, String]
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    // control chars (tabs included) are illegal inside JSON strings —
+    // flatten them so one exotic message cannot corrupt the line
+    def describe(e: Throwable): String = s"${e.getClass.getSimpleName}: ${
+      Option(e.getMessage).getOrElse("").map(c => if (c < ' ') ' ' else c).take(200)}"
     (1 to warmups).foreach { _ =>
       ordered.foreach { case (name, fn) =>
         try runOnce(fn) catch {
-          case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: $e")
+          case NonFatal(e) =>
+            System.err.println(s"[bench] warmup $name failed: $e")
+            warmupErrors(name) = describe(e)
         }
         GraftSession.release(spark)
       }
     }
     // measure: per-query MEDIAN of 3 passes — observed run-to-run noise at
     // sf0.1 is ±1s/query, so a single sample misattributes scheduler/GC
-    // hiccups to whichever query they landed on.
+    // hiccups to whichever query they landed on. Each sample also counts
+    // the classes Spark generated and compiled while the key ran: a class
+    // missing from Spark's 100-entry codegen cache is compiled again on
+    // every pass, so a nonzero steady count is time the key spends in the
+    // compiler.
     val passes = 3
-    // A key that throws in a MEASURED pass must not record its
-    // time-to-failure as a latency with rc 0 (the correctness gate catches
-    // broken keys, but the bench artifact would silently carry a bogus
-    // number) — collect the failure and emit it in the JSON instead.
-    val errors = scala.collection.mutable.Map.empty[String, String]
     val samples = (1 to passes).map { _ =>
       ordered.map { case (name, fn) =>
+        val c0 = org.apache.spark.GraftCodegen.compiledClasses
         val t0 = System.nanoTime()
         try runOnce(fn) catch {
-          case NonFatal(e) =>
-            // control chars (tabs included) are illegal inside JSON strings
-            // — flatten them so one exotic message cannot corrupt the line
-            errors(name) = s"${e.getClass.getSimpleName}: ${
-              Option(e.getMessage).getOrElse("")
-                .map(c => if (c < ' ') ' ' else c).take(200)}"
+          case NonFatal(e) => errors(name) = describe(e)
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        val compiled = org.apache.spark.GraftCodegen.compiledClasses - c0
         GraftSession.release(spark)
-        name -> elapsed
+        name -> (elapsed, compiled)
       }.toMap
     }
-    val results = queries.keys.map { name =>
-      val xs = samples.map(_(name)).sorted
-      name -> xs(xs.size / 2)
-    }.toMap
+    def median[T: Ordering](xs: Seq[T]): T = xs.sorted.apply(xs.size / 2)
+    val results = queries.keys.map(name => name -> median(samples.map(_(name)._1))).toMap
+    val compiles = queries.keys.map(name => name -> median(samples.map(_(name)._2))).toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -91,9 +99,11 @@ object Bench {
     val hk = SparkEntry.harnessKeys.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val errs = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_harness":$harness,"total_operators":${total - harness},"harness_keys":$hk,"errors":$errs,"queries":$qs,"sf":"$sfDir"}""")
+    def jmap(m: scala.collection.Map[String, String]) = m.toSeq.sortBy(_._1)
+      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val cs = compiles.toSeq.sortBy(_._1)
+      .map { case (k, n) => jstr(k) + ":" + n }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","total_harness":$harness,"total_operators":${total - harness},"harness_keys":$hk,"errors":${jmap(errors)},"warmup_errors":${jmap(warmupErrors)},"queries":$qs,"compiled_classes":$cs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

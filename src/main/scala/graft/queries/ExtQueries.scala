@@ -750,25 +750,6 @@ object ExtQueries {
     * 99.1 % of truth pairs while cutting candidate volume 6.5×. */
   private[queries] val DedupEvalDfCap = 16
 
-  /** MinHash + banded-LSH near-duplicate detection with exact-Jaccard
-    * verification — the scale path for fuzzy dedup (all-pairs is banned).
-    *
-    * Near-duplicates are synthesized deterministically: each document gets a
-    * variant with its first 5 tokens dropped (id + 1,000,000) — the "same
-    * article, different boilerplate" shape. Pipeline, identical in both
-    * engines:
-    *   1. per-token 31-bit hashes ([[hash31]]: md5-based, cross-engine) →
-    *      numeric 3-gram shingle hashes ([[ShingleC]] polynomial), distinct
-    *      per doc;
-    *   2. 16 minhashes via the pinned universal-hash family;
-    *   4. 4 bands × 4 rows: band signature = joined minhash run;
-    *   5. candidate pairs = docs sharing ANY (band, signature) bucket —
-    *      an equi-join on the bucket key, shuffle ∝ |docs|·bands;
-    *   6. verify candidates with EXACT Jaccard on shingle sets; keep
-    *      J ≥ 0.5, tested integer-side (2·|∩| ≥ |∪|) — no floats anywhere.
-    *
-    * Output is pure integers (ids + intersection/union sizes), so the oracle
-    * compare is exact by construction. */
   /** Id shift separating a synthesized re-crawl/variant row from its base
     * document in the augmented universe — shared by every operator that
     * splits that universe back into (corpus, batch) sides
@@ -819,33 +800,67 @@ object ExtQueries {
     toked.select(keyCols :+ array_distinct(shingleExpr).as("ds"): _*)
   }
 
+  /** MinHash + banded-LSH near-duplicate detection with exact-Jaccard
+    * verification — the scale path for fuzzy dedup (all-pairs is banned).
+    *
+    * Near-duplicates are synthesized deterministically: each document gets a
+    * variant with its first 5 tokens dropped (id + 1,000,000) — the "same
+    * article, different boilerplate" shape. Pipeline, identical in both
+    * engines:
+    *   1. per-token 31-bit hashes ([[hash31]]: md5-based, cross-engine) →
+    *      numeric 3-gram shingle hashes ([[ShingleC]] polynomial), distinct
+    *      per doc;
+    *   2. 16 minhashes via the pinned universal-hash family;
+    *   4. 4 bands × 4 rows: band signature = joined minhash run;
+    *   5. candidate pairs = docs sharing ANY (band, signature) bucket —
+    *      an equi-join on the bucket key, shuffle ∝ |docs|·bands;
+    *   6. verify candidates with EXACT Jaccard on shingle sets; keep
+    *      J ≥ 0.5, tested integer-side (2·|∩| ≥ |∪|) — no floats anywhere.
+    *
+    * Output is pure integers (ids + intersection/union sizes), so the oracle
+    * compare is exact by construction. It is sorted inside one partition,
+    * as [[jaccardPrefix]]: a global `orderBy` would sample the verify stage
+    * in an extra job that re-runs it. */
   def minhashDedup(spark: SparkSession, dir: String): DataFrame =
-    minhashVerifiedPairs(spark, dir).orderBy("doc_a", "doc_b")
+    minhashVerifiedPairs(spark, dir)
+      .repartition(1)
+      .sortWithinPartitions("doc_a", "doc_b")
 
   /** The verified near-duplicate pair stream WITHOUT the output sort —
     * shared by [[minhashDedup]] (which just orders it) and [[dupClusters]]
     * (which feeds it into connected components; a sort before a self-join
-    * would be a wasted shuffle). */
+    * would be a wasted shuffle).
+    *
+    * CHECKPOINT CONTRACT: the distinct-shingle sets are read by the
+    * signature path AND both sides of the verification join, so `shd` is an
+    * EAGER `localCheckpoint` — computed by exactly one job (a persisted
+    * frame that is not yet cached is materialized by AQE once per plan
+    * branch that reads it, in concurrent jobs) and read with no generated
+    * columnar-cache accessors; the bands are checkpointed the same way
+    * ([[minhashVerifiedPairsFrom]]). At 100 TB this materialization
+    * (≈ corpus token volume) is the standard minhash-pipeline
+    * intermediate. `spark.catalog.clearCache()` does not release a
+    * checkpoint; [[graft.GraftSession.release]]'s RDD sweep or
+    * [[graft.operators.IterStorage.release]] does. */
   private def minhashVerifiedPairs(spark: SparkSession, dir: String): DataFrame = {
     val all = docsWithVariants(spark, dir).select(col("doc_id"), col("text"))
-
-    // PERSISTED: the distinct-shingle sets are consumed by the signature
-    // path AND both sides of the verification join — without the persist
-    // the corpus is re-scanned and re-shingled per consumer (8 scans
-    // observed). At 100 TB this materialization (≈ corpus token volume) is
-    // the standard minhash-pipeline intermediate; MEMORY_AND_DISK spills
-    // instead of OOM.
-    val shd = shingleSets(all)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    minhashVerifiedPairsFrom(shd)
+    minhashVerifiedPairsFrom(shingleSets(all).localCheckpoint(true))
   }
 
   /** [[minhashVerifiedPairs]] over a CALLER-materialized shingle frame —
     * lets [[dedupEval]] share ONE shingle materialization between its
     * exact-Jaccard truth set and the minhash family it grades, instead of
-    * shingling the corpus twice. */
+    * shingling the corpus twice. The bands are an eager `localCheckpoint`:
+    * both sides of the bucket self-join read them, and one job computes
+    * them. They are hash-partitioned on `doc_id` first and checkpointed
+    * through [[org.apache.spark.sql.GraftCheckpoint]], which keeps that
+    * partitioning: the self-join broadcasts one side, so every candidate
+    * `(doc_a, doc_b)` already sits in the partition of its `doc_a` and the
+    * `distinct` runs without a shuffle of the candidate stream. */
   private def minhashVerifiedPairsFrom(shd: DataFrame): DataFrame = {
-    val bands = minhashBands(shd)
+    val bands = org.apache.spark.sql.GraftCheckpoint.localCheckpoint(
+      minhashBands(shd, persist = false)
+        .repartition(shd.sparkSession.sparkContext.defaultParallelism, col("doc_id")))
     val cand = bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
@@ -866,9 +881,11 @@ object ExtQueries {
     * NumHashes separate interpreted transform+array_min folds per row, the
     * same per-pass shape SimHashBits and HyperplaneBands replaced.
     * PERSISTED by default: |docs|·NumBands small rows, probed twice by
-    * either join shape; callers clearCache() after materializing. The
-    * streaming gate passes `persist = false` for its per-micro-batch side —
-    * consumed exactly once, a cache entry there would leak per batch. */
+    * either join shape; [[graft.GraftSession.release]] drops the entry. The
+    * self-join passes `persist = false` and checkpoints the frame itself
+    * ([[minhashVerifiedPairsFrom]]); the streaming gate passes it for its
+    * per-micro-batch side — consumed exactly once, a cache entry there
+    * would leak per batch. */
   private[graft] def minhashBands(shd: DataFrame, persist: Boolean = true): DataFrame = {
     val sigs = shd
       .select(col("doc_id"),
@@ -887,22 +904,24 @@ object ExtQueries {
 
   /** Exact-Jaccard verification tail shared by the minhash family and
     * [[dedupEval]]'s ground truth: join `(doc_a, doc_b)` candidate pairs
-    * back to their shingle sets and keep J ≥ 0.5, tested integer-side
-    * (2·|∩| ≥ |∪| — no floats). ONE definition so the truth set and the
-    * family it grades can never verify with different criteria. */
-  private[queries] def verifiedJaccardPairs(cand: DataFrame, shd: DataFrame): DataFrame =
+    * back to their shingle sets and keep J ≥ 0.5, tested integer-side — no
+    * floats. ONE definition so the truth set and the family it grades can
+    * never verify with different criteria. Both sides join the SAME `shd`
+    * frame, so their broadcasts are one reused exchange, and the filter is
+    * 3·|∩| ≥ |A| + |B| (the same integers as 2·|∩| ≥ |∪|, since
+    * |∪| = |A| + |B| − |∩| for sets): Catalyst pushes it into the join
+    * condition, where it calls the |∩| kernel (primitive counting, no
+    * boxed hash set or materialized intersection) once per candidate. */
+  private[queries] def verifiedJaccardPairs(cand: DataFrame, shd: DataFrame): DataFrame = {
+    val (dsA, dsB) = (col("a.ds"), col("b.ds"))
+    val nInter = intersectCount(dsA, dsB).cast("int")
+    val nAB = size(dsA) + size(dsB)
     cand
-      .join(shd.select(col("doc_id").as("doc_a"), col("ds").as("ds_a")), Seq("doc_a"))
-      .join(shd.select(col("doc_id").as("doc_b"), col("ds").as("ds_b")), Seq("doc_b"))
-      // |∩| via the primitive counting kernel (no boxed hash set, no
-      // materialized intersection array); |∪| = |A| + |B| − |∩| replaces
-      // the array_union materialization — sets, so the identity is exact
-      .withColumn("n_inter",
-        intersectCount(col("ds_a"), col("ds_b")).cast("int"))
-      .select(
-        col("doc_a"), col("doc_b"), col("n_inter"),
-        (size(col("ds_a")) + size(col("ds_b")) - col("n_inter")).as("n_union"))
-      .filter(lit(2) * col("n_inter") >= col("n_union"))
+      .join(shd.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(shd.as("b"), col("doc_b") === col("b.doc_id"))
+      .filter(lit(3) * nInter >= nAB)
+      .select(col("doc_a"), col("doc_b"), nInter.as("n_inter"), (nAB - nInter).as("n_union"))
+  }
 
   // ---- e_cross_dedup ------------------------------------------------------
 
@@ -1239,24 +1258,31 @@ object ExtQueries {
     * where it calls the kernel once per candidate (the |∪| form names
     * |∩| twice and calls it twice).
     *
-    * Shuffles: one df aggregate, one per-doc prefix repartition (one
+    * Shuffles: one df aggregate, one per-doc posting repartition (one
     * partition per core, so AQE cannot fold the quadratic self-join into
-    * one task on a small corpus; the window reuses it), the per-pair
-    * collision aggregate, and the output's single-partition exchange. The
-    * output is sorted inside that one partition because a global `orderBy`
-    * over the un-shuffled verify stage makes the range partitioner sample
-    * that stage in an extra job, running the self-join, the pair
-    * aggregate and the verify twice. The output is |verified pairs| rows,
-    * a small fraction of the candidates.
+    * one task on a small corpus; the window reuses it), and the output's
+    * single-partition exchange. The per-pair collision aggregate needs no
+    * shuffle of its own: the ranked postings keep their `doc_id` hash
+    * partitioning through the checkpoint, the candidate self-join
+    * broadcasts one side, so every `(doc_a, doc_b)` group is already in
+    * the partition of its `doc_a`. The output is sorted inside that one
+    * partition because a global `orderBy` over the un-shuffled verify
+    * stage makes the range partitioner sample that stage in an extra job,
+    * running the self-join, the pair aggregate and the verify twice. The
+    * output is |verified pairs| rows, a small fraction of the candidates.
     *
     * CACHING CONTRACT: `sets` (read by the postings path and the verify)
-    * and `prefix` (both sides of the candidate self-join) are EAGER
-    * `localCheckpoint`s, each computed by exactly one job (AQE
+    * and the ranked postings (both sides of the candidate self-join) are
+    * EAGER `localCheckpoint`s, each computed by exactly one job (AQE
     * materializes a not-yet-cached persisted frame once per plan branch
-    * that reads it, in concurrent jobs), and their reads need no
-    * generated columnar-cache accessors. `spark.catalog.clearCache()` does not release them; the
-    * Bench/Verify teardown's RDD sweep ([[graft.GraftSession.release]])
-    * or [[graft.operators.IterStorage.release]] on the output does. */
+    * that reads it, in concurrent jobs), and their reads need no generated
+    * columnar-cache accessors. The ranked postings are checkpointed
+    * through [[org.apache.spark.sql.GraftCheckpoint]], which keeps their
+    * `doc_id` partitioning (a plain `localCheckpoint` under adaptive
+    * execution forgets it). `spark.catalog.clearCache()` does not release
+    * them; the Bench/Verify teardown's RDD sweep
+    * ([[graft.GraftSession.release]]) or
+    * [[graft.operators.IterStorage.release]] on the output does. */
   def jaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
     val (sets, _, prefix) = jaccardPrefixIndex(spark, dir)
     val (bsA, bsB) = (col("a.bs"), col("b.bs"))
@@ -1288,27 +1314,32 @@ object ExtQueries {
   }
 
   /** [[jaccardPrefix]]'s index — (`sets` with `bs` sorted, its bigram
-    * `postings`, the (df, g)-ranked `prefix` postings), `sets` and
-    * `prefix` eagerly checkpointed — derived in one place for the key and
-    * [[jaccardPrefixCandidateCounts]], so the pruning the spec measures is
-    * the key's own. */
+    * `postings`, the (df, g)-ranked `prefix` postings), `sets` and the
+    * ranked postings eagerly checkpointed — derived in one place for the
+    * key and [[jaccardPrefixCandidateCounts]], so the pruning the spec
+    * measures is the key's own. The checkpoint holds every posting with
+    * its rank, straight off the window, and the prefix filter runs in the
+    * stages that read it: a filter between the window and the checkpoint
+    * would be one more generated stage (the window itself is not
+    * code-generated), for postings that are slim integer rows. */
   private def jaccardPrefixIndex(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
-    // each frame holds exactly the columns its readers take, so no read
-    // of a checkpoint needs a pruning projection
+    // `sets` holds exactly the columns its readers take, so no read of it
+    // needs a pruning projection
     val sets = bigramSetsKeeping(docsWithVariants(spark, dir), Nil)
       .select(col("doc_id"), sort_array(col("bs")).as("bs"))
       .localCheckpoint(true)
     val postings = sets.select(col("doc_id"), size(col("bs")).as("nb"),
       explode(col("bs")).as("g"))
     val dfreq = postings.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    val prefix = postings.join(dfreq, Seq("g"))
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc)))
+    val ranked = org.apache.spark.sql.GraftCheckpoint.localCheckpoint(
+      postings.join(dfreq, Seq("g"))
+        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("doc_id")).orderBy(col("df").asc, col("g").asc))))
+    val prefix = ranked
       .filter(col("rn") <= col("nb") - expr("(nb + 1) div 2") + 1)
       .select(col("g"), col("doc_id"), col("nb"), col("rn"))
-      .localCheckpoint(true)
     (sets, postings, prefix)
   }
 
@@ -6558,36 +6589,43 @@ object ExtQueries {
     bpeTrainRounds(spark, dir, BpeTrainRounds)
 
   /** [[bpeTrain]] with the round count as an explicit knob: the merge
-    * table of [[bpeChain]], one row per round that found a pair. */
+    * table of [[bpeChain]], one row per round that found a pair. The rules
+    * come back from the driver already in `iter` order, so the table is a
+    * local relation read as ONE partition — no range exchange, no sampling
+    * job and no sort — and no vocabulary frame is built for it. */
   def bpeTrainRounds(spark: SparkSession, dir: String, rounds: Int): DataFrame = {
     val (merges, _) = bpeChain(spark, dir, rounds)
     import spark.implicits._
-    merges.toDF("iter", "lhs", "rhs", "n").orderBy("iter")
+    merges.toDF("iter", "lhs", "rhs", "n").coalesce(1)
   }
 
-  /** The training chain: (merge rules, FINAL symbolized vocabulary
-    * `(w, wc, syms)` as a local frame). The final vocabulary is what
-    * [[bpeEncode]] serves from — returned from here so training and
-    * encoding share one chain definition (the [[kmeansChain]] device).
+  /** The training chain: (merge rules in `iter` order, FINAL symbolized
+    * vocabulary `(w, wc, syms)` as a local frame, built on demand — the
+    * merge table alone needs none). The final vocabulary is what
+    * [[bpeEncode]] and [[vocabCoverage]] serve from — returned from here so
+    * training and encoding share one chain definition (the [[kmeansChain]]
+    * device).
     *
     * The corpus-sized step — tokens → per-word count, map-side-combined —
-    * and the symbolization (`split(w, "")`, one symbol per code point) are
-    * one Spark action; their rows are collected ONCE and every round runs
-    * in memory. SCALE CONTRACT: the merge loop holds |distinct words| rows
-    * in the Spark driver, where a single-process BPE trainer keeps its word
-    * counts. Ties compare strings in the engines' order, UTF-8 bytes
-    * (`binaryCompare`; UTF-16 `compareTo` differs past the BMP). Rounds
-    * stop at an exhausted vocabulary, so [[bpeEncode]] then serves the
-    * last one. */
+    * and the symbolization (`split(w, "")`, one symbol per code point, its
+    * empty strings removed) are one Spark action; their rows are collected
+    * ONCE and every round runs in memory. `split` yields no null element,
+    * so `array_remove` keeps exactly what an `x != ""` filter lambda
+    * keeps, and unlike the lambda it keeps the word-count aggregate inside
+    * whole-stage codegen. SCALE CONTRACT: the merge loop holds
+    * |distinct words| rows in the Spark driver, where a single-process BPE
+    * trainer keeps its word counts. Ties compare strings in the engines'
+    * order, UTF-8 bytes (`binaryCompare`; UTF-16 `compareTo` differs past
+    * the BMP). Rounds stop at an exhausted vocabulary, so [[bpeEncode]] then
+    * serves the last one. */
   private def bpeChain(spark: SparkSession, dir: String,
-      rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+      rounds: Int): (Seq[(Int, String, String, Long)], () => DataFrame) = {
     import org.apache.spark.unsafe.types.UTF8String
     require(rounds >= 1, s"round count must be >= 1, got $rounds")
     val symbolized = table(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
-      .select(col("w"), col("wc"),
-        filter(split(col("w"), ""), x => x =!= "").as("syms"))
+      .select(col("w"), col("wc"), array_remove(split(col("w"), ""), "").as("syms"))
     val words = symbolized.collect()
     var syms = words.map(_.getSeq[String](2).toVector)
     val utf8 = Ordering.fromLessThan[UTF8String](_.binaryCompare(_) < 0)
@@ -6607,7 +6645,8 @@ object ExtQueries {
         (it, l, r, n)
       }
     }.takeWhile(_.isDefined).flatten.toVector
-    val vocab = spark.createDataFrame(java.util.Arrays.asList(words.indices.map(i =>
+    val vocab = () => spark.createDataFrame(
+      java.util.Arrays.asList(words.indices.map(i =>
         org.apache.spark.sql.Row(words(i).get(0), words(i).get(1), syms(i))): _*),
       symbolized.schema)
     (merges, vocab)
@@ -6635,7 +6674,7 @@ object ExtQueries {
     val docTok = table(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
     docTok
-      .join(vocab.select(col("w"), size(col("syms")).as("n_syms")), Seq("w"))
+      .join(vocab().select(col("w"), size(col("syms")).as("n_syms")), Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_syms")).as("n_bpe_tokens"))
       .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"),
@@ -6709,7 +6748,7 @@ object ExtQueries {
     * key. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val (_, vocab) = bpeChain(spark, dir, BpeTrainRounds)
-    val wstats = vocab.select(col("w"),
+    val wstats = vocab().select(col("w"),
       size(col("syms")).as("n_syms"),
       size(filter(col("syms"), s => length(s) > 1)).as("w_merged"),
       aggregate(transform(col("syms"),

@@ -65,6 +65,7 @@ class BpeTrainSpec extends AnyFunSuite {
       .as[(Int, String, String, Long)].collect().toSeq
     spark.catalog.clearCache()
     val want = localTrain(ExtQueries.BpeTrainRounds)
+    // an ordered Seq: the merge table is read in `iter` order as it is
     assert(got == want, s"distributed chain diverged:\n got=$got\nwant=$want")
     // non-vacuous: by round 6 at least one merge must build on an earlier
     // merged symbol (a multi-char lhs or rhs), or the chain never chained
@@ -101,8 +102,9 @@ class BpeTrainSpec extends AnyFunSuite {
 
   test("round 1 is e_bpe_merges' top-ranked pair") {
     import spark.implicits._
+    // the table comes back in `iter` order, unsorted by the reader
     val first = ExtQueries.bpeTrain(spark, dir)
-      .as[(Int, String, String, Long)].collect().minBy(_._1)
+      .as[(Int, String, String, Long)].collect().head
     spark.catalog.clearCache()
     val top = ExtQueries.bpeMerges(spark, dir)
       .as[(String, Long)].collect().head

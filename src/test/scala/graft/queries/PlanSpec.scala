@@ -1,15 +1,23 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkFixture
+import graft.{ExecutedPlans, SparkFixture}
 
 /** SURVEY §5 #5: plan-shape assertions. These pin the SCALE properties the
   * judge's .explain audit checks — filters reaching the parquet reader, no
   * redundant scans — so a regression shows up as a red test, not a slow run
   * at 100 TB. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkFixture.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -107,10 +115,55 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("InMemoryTableScan")) // the shared aggregate is cached
   }
 
+  /** Parquet scans of `documents` over every job a key run executes — its
+    * eager checkpoints included, and each persisted frame it reads counted
+    * once, by the plan that fills the cache. */
+  private def documentScans(plans: Seq[SparkPlan]): Int = {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = collect(p) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName.startsWith("documents")) => s
+    }
+    val cached = plans.flatMap(collect(_) { case c: InMemoryTableScanExec => c.relation.cacheBuilder })
+      .distinct.map(_.cachedPlan)
+    (plans ++ cached).map(scans(_).size).sum
+  }
+
   test("minhash scans documents exactly once (generator, not self-union)") {
-    val plan = formatted(ExtQueries.minhashDedup(spark, dir))
-    assert(parquetScans(plan) === 1)
-    assert(plan.contains("InMemoryTableScan")) // shingle sets cached for reuse
+    // the shingle sets are an eager checkpoint read by the banding path
+    // and both verify sides: one scan over all of the key's jobs
+    val (_, plans) = ExecutedPlans.of(spark)(ExtQueries.minhashDedup(spark, dir).collect())
+    assert(documentScans(plans) === 1)
+    graft.GraftSession.release(spark)
+  }
+
+  test("minhash verify: both sides share one broadcast; no range partitioning") {
+    val (df, plans) = ExecutedPlans.of(spark) {
+      val df = ExtQueries.minhashDedup(spark, dir)
+      df.collect()
+      df
+    }
+    val plan = df.queryExecution.executedPlan
+    // the verify joins build on the shingle sets (`ds`); the second reads
+    // the first one's exchange
+    def build(j: BroadcastHashJoinExec): SparkPlan =
+      (if (j.buildSide == BuildLeft) j.left else j.right) match {
+        case i: InputAdapter => i.child
+        case p => p
+      }
+    val builds = collect(plan) {
+      case j: BroadcastHashJoinExec if build(j).output.exists(_.name == "ds") =>
+        build(j) match {
+          case q: BroadcastQueryStageExec => q.plan.getClass.getSimpleName
+          case other => other.getClass.getSimpleName
+        }
+    }
+    assert(builds.sorted == Seq(classOf[BroadcastExchangeExec].getSimpleName,
+      classOf[ReusedExchangeExec].getSimpleName), plan.treeString)
+    val ranges = plans.flatMap(collect(_) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    })
+    assert(ranges.isEmpty, "the output sort must not sample the verify stage")
+    graft.GraftSession.release(spark)
   }
 
   test("cosine top-k: corpus scanned once, query side pruned by vec_id filter") {
@@ -552,6 +605,31 @@ class PlanSpec extends AnyFunSuite {
         "shuffle anti-join re-partitions the whole postings stream")
     assert(!plan.contains("SortMergeJoin"), plan.take(800))
     assert(parquetScans(plan) == 1)
+    spark.catalog.clearCache()
+  }
+
+  test("bpe train: the merge table needs no exchange; the word count is code-generated") {
+    val (df, plans) = ExecutedPlans.of(spark) {
+      val df = ExtQueries.bpeTrain(spark, dir)
+      df.collect()
+      df
+    }
+    assert(collect(df.queryExecution.executedPlan) { case e: Exchange => e }.isEmpty,
+      df.queryExecution.executedPlan.treeString)
+    // the word-count aggregates run inside whole-stage codegen
+    def inCodegen(p: SparkPlan): Seq[SparkPlan] = p match {
+      case w: WholeStageCodegenExec =>
+        def body(q: SparkPlan): Seq[SparkPlan] = q match {
+          case _: InputAdapter => Nil
+          case _ => q +: q.children.flatMap(body)
+        }
+        body(w.child)
+      case _ => Nil
+    }
+    val aggs = plans.flatMap(collect(_) { case a: BaseAggregateExec => a })
+    val generated = plans.flatMap(collectWithSubqueries(_) { case p => p }.flatMap(inCodegen)).toSet
+    assert(aggs.nonEmpty)
+    aggs.foreach(a => assert(generated.contains(a), s"aggregate outside codegen: ${a.simpleString(200)}"))
     spark.catalog.clearCache()
   }
 

@@ -95,6 +95,8 @@ def main(sf_dir: str, out_json: str, runs: int = 3, chunk: int = 20,
     med: dict = {}
     pos: dict = {}
     errors: dict = {}
+    warmup_errors: dict = {}
+    compiled: dict = {}
     raised_warmups: dict = {}
     for ci, ck in enumerate(chunks):
         env = {"SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_CPUS": "32",
@@ -112,8 +114,10 @@ def main(sf_dir: str, out_json: str, runs: int = 3, chunk: int = 20,
         # the error into the artifact and fail the run at the end
         for o in outs:
             errors.update(o.get("errors", {}))
+            warmup_errors.update(o.get("warmup_errors", {}))
         for j, k in enumerate(ck):
             med[k] = statistics.median(s[k] for s in samples)
+            compiled[k] = statistics.median(o.get("compiled_classes", {}).get(k, 0) for o in outs)
             pos[k] = {"chunk": ci, "index": j}
         done = sum(len(c) for c in chunks[:ci + 1])
         print(f"chunk {ci + 1}/{len(chunks)}: {done}/{len(measured)} keys, "
@@ -136,6 +140,8 @@ def main(sf_dir: str, out_json: str, runs: int = 3, chunk: int = 20,
         "harness_keys": sorted(hk),
         "queries": full,
         "errors": errors,
+        "warmup_errors": warmup_errors,
+        "compiled_classes": compiled,
         "run_position": pos,
         "raised_warmups": raised_warmups,
         "sf": sf_dir,
